@@ -60,10 +60,10 @@ def _previously_checked() -> set[str]:
     return seen
 
 
-# Round-10 promotion (VERDICT r9 ask #1): plans/staged_ops_r10.py is
-# folded unconditionally into QUERIES/ORACLES (same tail-fold mechanism
-# as staged_ops.py / staged_ops_r6 / staged_ops_r7 / staged_ops_r8 /
-# staged_ops_r9), adding its 5 oracle-gated operators to the registry —
+# Round-10 promotion (VERDICT r9 ask #1): plans/staged_ops_r10.py
+# registers into QUERIES/ORACLES with ``@register`` (as staged_ops.py /
+# staged_ops_r6 / staged_ops_r7 / staged_ops_r8 / staged_ops_r9 do),
+# adding its 5 oracle-gated operators to the registry —
 # 277 names total. With the driver's cumulative record complete through
 # round 9 (272/272), the never-checked set this round is exactly these
 # promotions — they fit the ~50-row window with ~45 rows of headroom.

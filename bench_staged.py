@@ -25,7 +25,7 @@ import re
 import time
 
 from traffic_data_pipeline_spark.plans.staged_ops_r11 import (
-    STAGED_R11_QUERIES as STAGED_QUERIES,
+    STAGED_R11_QUERIES,
 )
 from traffic_data_pipeline_spark.session import get_spark
 
@@ -80,7 +80,7 @@ def main() -> None:
     from traffic_data_pipeline_spark.functions.execution import release
 
     timings: dict[str, float] = {}
-    for name, fn in sorted(STAGED_QUERIES.items()):
+    for name, fn in sorted(STAGED_R11_QUERIES.items()):
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         timings[name] = round(time.perf_counter() - t0, 3)

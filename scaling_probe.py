@@ -338,22 +338,6 @@ LINEITEM_NAMES = [
 def main() -> None:
     from traffic_data_pipeline_spark.functions.execution import release
     from traffic_data_pipeline_spark.plans.queries import QUERIES
-    from traffic_data_pipeline_spark.plans.staged_ops import STAGED_QUERIES
-    from traffic_data_pipeline_spark.plans.staged_ops_r6 import (
-        STAGED_R6_QUERIES,
-    )
-    from traffic_data_pipeline_spark.plans.staged_ops_r7 import (
-        STAGED_R7_QUERIES,
-    )
-    from traffic_data_pipeline_spark.plans.staged_ops_r8 import (
-        STAGED_R8_QUERIES,
-    )
-    from traffic_data_pipeline_spark.plans.staged_ops_r9 import (
-        STAGED_R9_QUERIES,
-    )
-    from traffic_data_pipeline_spark.plans.staged_ops_r10 import (
-        STAGED_R10_QUERIES,
-    )
     from traffic_data_pipeline_spark.plans.staged_ops_r11 import (
         STAGED_R11_QUERIES,
     )
@@ -372,13 +356,7 @@ def main() -> None:
     keep = set(only.split(",")) if only else None
 
     def lookup(name):
-        return (QUERIES.get(name) or STAGED_QUERIES.get(name)
-                or STAGED_R6_QUERIES.get(name)
-                or STAGED_R7_QUERIES.get(name)
-                or STAGED_R8_QUERIES.get(name)
-                or STAGED_R9_QUERIES.get(name)
-                or STAGED_R10_QUERIES.get(name)
-                or STAGED_R11_QUERIES[name])
+        return QUERIES.get(name) or STAGED_R11_QUERIES[name]
 
     def probe(dirs, names, warm_table):
         if keep is not None:

@@ -47,6 +47,14 @@ def rows_of(records, columns):
     return [columns[i] for i in order], out
 
 
+def registered_in(module) -> list[str]:
+    """Sorted registry names whose query function ``module`` defines."""
+    from traffic_data_pipeline_spark.plans.queries import QUERIES
+
+    return sorted(n for n, fn in QUERIES.items()
+                  if fn.__module__ == module.__name__)
+
+
 def assert_matches_oracle(spark_df, sql: str, sf_dir: str):
     con = duck_con(sf_dir)
     try:

@@ -173,9 +173,8 @@ BOUNDARY_QUERIES = [
                               # both engines
 ]
 
-# Staged (round-10) queries whose boundary constants the planted rows
-# exercise — same oracle compare, addressed through the staging dicts
-# until promotion folds them into the registry.
+# Round-10 queries (plans/staged_ops_r10.py) whose boundary constants the
+# planted rows exercise — same oracle compare.
 STAGED_BOUNDARY_QUERIES = [
     "events_user_deltapresence",       # planted 2*pr == pu tie cell +
                                        # the 50.0/49.99 band edge pair
@@ -284,13 +283,7 @@ def test_boundary_fixture_matches_oracle(spark, bdir, name):
 
 @pytest.mark.parametrize("name", STAGED_BOUNDARY_QUERIES)
 def test_staged_boundary_fixture_matches_oracle(spark, bdir, name):
-    from traffic_data_pipeline_spark.plans.staged_ops_r10 import (
-        STAGED_R10_ORACLES,
-        STAGED_R10_QUERIES,
-    )
-
-    assert_matches_oracle(STAGED_R10_QUERIES[name](spark, bdir),
-                          STAGED_R10_ORACLES[name], bdir)
+    assert_matches_oracle(QUERIES[name](spark, bdir), ORACLES[name], bdir)
 
 
 def test_planted_delta_tie_and_k_edge_cells(spark, bdir):

@@ -145,14 +145,14 @@ def test_promotion_unconditional_and_rotation_intact():
     never-checked costly name queues behind the never-checked cheap
     ones."""
     import __spark_entry__ as e
-    from traffic_data_pipeline_spark.plans.staged_ops import (
-        STAGED_ORACLES,
-        STAGED_QUERIES,
-    )
+    from tests.oracle import registered_in
+    from traffic_data_pipeline_spark.plans import staged_ops
 
     q, o = e.queries(), e.oracle_sql()
-    assert set(STAGED_QUERIES) <= set(q)
-    assert set(STAGED_ORACLES) <= set(o)
+    staged = registered_in(staged_ops)
+    assert staged
+    assert set(staged) <= set(q)
+    assert set(staged) <= set(o)
     names = list(q)
     seen = e._previously_checked()
     unchecked_cheap = [n for n in names

@@ -1,11 +1,12 @@
-"""Registry completeness under EVERY import entry point (round 6).
+"""Registry completeness under EVERY import entry point.
 
-The registration modules form an import web (queries.py's tail imports
-every sibling; staged folds import queries back), and twice now a module
-imported FIRST broke the chain: llm_ops reading ORACLES["doc_lm_score"]
-mid-registration (fixed round 5, _LM_SCORE_SQL), then extensions-first
+queries.py's tail imports every registering module, and those modules
+import ``register`` back (from queries.py, or from plans/registry.py
+when their own body reads sibling registrations). Twice a module
+imported FIRST broke that web: llm_ops reading ORACLES["doc_lm_score"]
+mid-registration (fixed with _LM_SCORE_SQL), then extensions-first
 hitting staged_ops_r6's body-time reads of extensions._COS_CTES and
-ORACLES["doc_lang_id"] (fixed round 6, moved to oracle_ctes). Those bugs
+ORACLES["doc_lang_id"] (fixed by moving them to oracle_ctes). Those bugs
 are invisible to every suite whose conftest imports queries first — so
 this test imports each plans module as the FIRST plans import of a fresh
 interpreter and checks the registry still completes, equal in size and
@@ -31,23 +32,15 @@ MODULES = [
     "staged_ops",
     "staged_ops_r6",
     "staged_ops_r7",
-    "staged_ops_r8",   # promoted round 8; its oracle late-binding
-                       # imports r7/queries BEFORE its own tail fold —
-                       # importing it FIRST must still complete the
-                       # registry
-    "staged_ops_r9",   # promoted round 9; its oracle late-binding
-                       # imports r8 (whose tail fold imports queries)
-                       # BEFORE its own tail fold — importing it FIRST
-                       # must still complete the registry
-    "staged_ops_r10",  # promoted round 10; its oracle late-binding
-                       # imports r8 (whose tail fold imports queries)
-                       # BEFORE its own tail fold — importing it FIRST
-                       # must still complete the registry
-    "staged_ops_r11",  # frozen (no fold), but its oracle late-binding
+    "staged_ops_r8",   # its oracle late-binding imports staged_ops_r7
+    "staged_ops_r9",   # its oracle late-binding imports staged_ops_r8
+    "staged_ops_r10",  # its oracle late-binding imports staged_ops_r8
+    "staged_ops_r11",  # unregistered, but its oracle late-binding
                        # imports queries (CMP_CTES) and oracle_ctes —
                        # importing it FIRST must still complete the
                        # registry
     "oracle_ctes",
+    "registry",
 ]
 
 _PROBE = """
@@ -73,3 +66,19 @@ def test_registry_complete_when_imported_first(mod):
     base = _probe("queries")
     got = _probe(mod)
     assert got == base, (mod, got, base)
+
+
+def test_register_rejects_a_name_already_registered():
+    """The one collision guard: registering a taken name raises and
+    leaves the existing entry untouched."""
+    from traffic_data_pipeline_spark.plans.queries import (
+        ORACLES,
+        QUERIES,
+        register,
+    )
+
+    name = "sensor_15min_agg"
+    before = (QUERIES[name], ORACLES[name])
+    with pytest.raises(RuntimeError, match=name):
+        register(name, "SELECT 1 AS x")(lambda spark, sf_dir: None)
+    assert (QUERIES[name], ORACLES[name]) == before

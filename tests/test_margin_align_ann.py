@@ -13,15 +13,13 @@ regeneration drift.
 
 from __future__ import annotations
 
-from traffic_data_pipeline_spark.plans.staged_ops import (
-    STAGED_QUERIES,
-)
+from traffic_data_pipeline_spark.plans.queries import QUERIES
 
 
 def test_ann_margin_align_recall_vs_brute(spark, sf_dir_oracle):
-    brute_rows = STAGED_QUERIES["embedding_margin_align"](
+    brute_rows = QUERIES["embedding_margin_align"](
         spark, sf_dir_oracle).collect()
-    ann_rows = STAGED_QUERIES["embedding_margin_align_ann"](
+    ann_rows = QUERIES["embedding_margin_align_ann"](
         spark, sf_dir_oracle).collect()
     brute = {(r.a_id, r.b_id) for r in brute_rows}
     ann = {(r.a_id, r.b_id) for r in ann_rows}
@@ -48,9 +46,9 @@ def test_ann_margin_agrees_on_shared_pairs(spark, sf_dir_oracle):
     keep) the k-NN mean cosine... except when a retrieved neighborhood
     has fewer than k candidates. Assert exact cosine equality and margin
     within a loose band — the strong check is each twin's own oracle."""
-    brute = {(r.a_id, r.b_id): r for r in STAGED_QUERIES[
+    brute = {(r.a_id, r.b_id): r for r in QUERIES[
         "embedding_margin_align"](spark, sf_dir_oracle).collect()}
-    ann = {(r.a_id, r.b_id): r for r in STAGED_QUERIES[
+    ann = {(r.a_id, r.b_id): r for r in QUERIES[
         "embedding_margin_align_ann"](spark, sf_dir_oracle).collect()}
     shared = set(brute) & set(ann)
     assert shared

@@ -19,19 +19,6 @@ from __future__ import annotations
 import pytest
 
 from traffic_data_pipeline_spark.plans.queries import QUERIES
-from traffic_data_pipeline_spark.plans.staged_ops import STAGED_QUERIES
-from traffic_data_pipeline_spark.plans.staged_ops_r6 import (
-    STAGED_R6_QUERIES,
-)
-from traffic_data_pipeline_spark.plans.staged_ops_r7 import (
-    STAGED_R7_QUERIES,
-)
-from traffic_data_pipeline_spark.plans.staged_ops_r8 import (
-    STAGED_R8_QUERIES,
-)
-from traffic_data_pipeline_spark.plans.staged_ops_r9 import (
-    STAGED_R9_QUERIES,
-)
 
 CASES = [
     "sensor_impute",
@@ -198,10 +185,7 @@ def test_partition_invariant(spark, sf_dir, name):
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     try:
-        fn = (QUERIES.get(name) or STAGED_QUERIES.get(name)
-              or STAGED_R6_QUERIES.get(name)
-              or STAGED_R7_QUERIES.get(name)
-              or STAGED_R8_QUERIES.get(name) or STAGED_R9_QUERIES[name])
+        fn = QUERIES[name]
         spark.conf.set(key, "3")
         narrow = _rows(fn(spark, sf_dir))
         release()

@@ -41,6 +41,34 @@ def test_ingest_backfill_then_incremental(spark, sf_dir, fact_path):
     assert spark.read.parquet(fact_path).select("START_DATE").distinct().count() > 1
 
 
+def test_second_night_on_same_input_path_is_ingested(spark, sf_dir, tmp_path):
+    """A night that lands as a new file under the SAME input path is
+    written by a second run in the same session — the runner must not
+    reuse the first night's session-cached fact."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    day = pc.cast(events["ts"], pa.date32())
+    last = pc.max(day).as_py()
+    is_last = pc.equal(day, pa.scalar(last, pa.date32()))
+    src = tmp_path / "input"
+    landing = src / "events.parquet"
+    landing.mkdir(parents=True)
+    fact_p = tmp_path / "fact"
+
+    pq.write_table(events.filter(pc.invert(is_last)), landing / "history.parquet")
+    run_nightly_ingest(spark, str(src), str(fact_p))
+    assert not (fact_p / f"START_DATE={last}").exists()
+
+    pq.write_table(events.filter(is_last), landing / "night.parquet")
+    run_nightly_ingest(spark, str(src), str(fact_p))
+    assert (fact_p / f"START_DATE={last}").is_dir()
+    assert (spark.read.parquet(str(fact_p))
+            .filter(F.col("START_DATE") == F.lit(last)).count() > 0)
+
+
 def test_config_bootstrap_then_delta(spark, sf_dir, tmp_path):
     state_p = str(tmp_path / "state")
     log_p = str(tmp_path / "changelog")

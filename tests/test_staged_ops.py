@@ -11,28 +11,31 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tests.oracle import assert_matches_oracle
+from tests.oracle import assert_matches_oracle, registered_in
+from traffic_data_pipeline_spark.plans import staged_ops
+from traffic_data_pipeline_spark.plans.queries import ORACLES, QUERIES
 from traffic_data_pipeline_spark.plans.staged_ops import (
     BPE_TOP_K,
     DECON_TAU,
-    STAGED_ORACLES,
-    STAGED_QUERIES,
     _DECON_OFFSET,
     _DECON_PLANTED,
 )
 
+STAGED_NAMES = registered_in(staged_ops)
+
 
 def test_staged_names_promoted():
-    """Round-5 promotion (VERDICT r4 ask #1): every staged op is now a
-    live registry name — same oracle gate, same exchange budgets, same
-    driver exposure as every other query."""
+    """Round-5 promotion (VERDICT r4 ask #1): all 32 ops defined in
+    plans/staged_ops.py are live registry names — same oracle gate, same
+    exchange budgets, same driver exposure as every other query."""
     import __spark_entry__ as e
     from tests.test_plan_shapes import CAPS
 
     live = set(e.queries())
-    assert set(STAGED_QUERIES) <= live
-    assert set(STAGED_ORACLES) <= set(e.oracle_sql())
-    assert set(STAGED_QUERIES) <= set(CAPS)
+    assert len(STAGED_NAMES) == 32
+    assert set(STAGED_NAMES) <= live
+    assert set(STAGED_NAMES) <= set(e.oracle_sql())
+    assert set(STAGED_NAMES) <= set(CAPS)
 
 
 def test_boilerplate_planted_coverage(spark, sf_dir_oracle):
@@ -40,7 +43,7 @@ def test_boilerplate_planted_coverage(spark, sf_dir_oracle):
     boilerplate coverage is at least those 12 positions; original docs
     (word-soup, no shared 8-grams with the header) are untouched by the
     planting — their coverage comes only from natural repeats."""
-    df = STAGED_QUERIES["doc_boilerplate_coverage"](spark, sf_dir_oracle)
+    df = QUERIES["doc_boilerplate_coverage"](spark, sf_dir_oracle)
     planted = {r.doc_id: r.n_boiler_tokens
                for r in df.filter(
                    F.col("doc_id").between(300000, 300029)).collect()}
@@ -63,7 +66,7 @@ def test_bpe_merge_step_shape(spark, sf_dir_oracle):
     """Exactly top-k rows, ranks contiguous, counts non-increasing and
     ties broken by pair ascending — the deterministic merge order a
     reproducible tokenizer build requires."""
-    rows = (STAGED_QUERIES["bpe_merge_step"](spark, sf_dir_oracle)
+    rows = (QUERIES["bpe_merge_step"](spark, sf_dir_oracle)
             .orderBy("rank").collect())
     assert [r.rank for r in rows] == list(range(1, BPE_TOP_K + 1))
     for a, b in zip(rows, rows[1:]):
@@ -80,7 +83,7 @@ def test_zorder_partitions_and_bounds(spark, sf_dir_oracle):
 
     li = load_table(spark, sf_dir_oracle, "lineitem")
     n = li.count()
-    rows = STAGED_QUERIES["lineitem_zorder_layout"](
+    rows = QUERIES["lineitem_zorder_layout"](
         spark, sf_dir_oracle).collect()
     assert sum(r.n_rows for r in rows) == n
     assert all(r.p_lo <= r.p_hi and r.s_lo <= r.s_hi for r in rows)
@@ -108,7 +111,7 @@ def test_pca_step_is_gram_action(spark, sf_dir_oracle):
         for j, x in enumerate(v):
             want[j] += s * float(x)
     got = {r.pos: r.component for r in
-           STAGED_QUERIES["embedding_pca_step"](spark, sf_dir_oracle).collect()}
+           QUERIES["embedding_pca_step"](spark, sf_dir_oracle).collect()}
     assert len(got) == dim
     for j in range(dim):
         assert math.isclose(got[j + 1], want[j], rel_tol=1e-6, abs_tol=1e-4)
@@ -152,8 +155,8 @@ def test_staged_dirty_text_parity(spark, tmp_path_factory, sf_dir_oracle, name):
         if not dst.exists():
             os.symlink(f"{sf_dir_oracle}/{t}.parquet", dst)
     assert_matches_oracle(
-        STAGED_QUERIES[name](spark, str(out)),
-        STAGED_ORACLES[name], str(out))
+        QUERIES[name](spark, str(out)),
+        ORACLES[name], str(out))
 
 
 def test_rrf_fusion_properties(spark, sf_dir_oracle):
@@ -163,7 +166,7 @@ def test_rrf_fusion_properties(spark, sf_dir_oracle):
     appear, contributing a single reciprocal term."""
     from traffic_data_pipeline_spark.plans.staged_ops import RRF_K, RRF_TOP_K
 
-    rows = STAGED_QUERIES["doc_hybrid_search_rrf"](
+    rows = QUERIES["doc_hybrid_search_rrf"](
         spark, sf_dir_oracle).collect()
     assert len(rows) == RRF_TOP_K
     scores = [r.rrf_score for r in rows]
@@ -178,7 +181,7 @@ def test_cluster_split_never_straddles(spark, sf_dir_oracle):
     """The whole point: every near-dup cluster lands in exactly one
     split, every doc is assigned, and all three splits are non-empty
     with roughly the 8/1/1 shape."""
-    rows = STAGED_QUERIES["split_cluster_assign"](
+    rows = QUERIES["split_cluster_assign"](
         spark, sf_dir_oracle).collect()
     by_cluster: dict = {}
     for r in rows:
@@ -203,7 +206,7 @@ def test_snm_catches_planted_twins(spark, sf_dir_oracle):
         _SNM_PLANTED,
     )
 
-    rows = STAGED_QUERIES["dedup_sorted_neighborhood"](
+    rows = QUERIES["dedup_sorted_neighborhood"](
         spark, sf_dir_oracle).collect()
     twins = {(r.doc_a, r.doc_b) for r in rows}
     caught = [i for i in range(_SNM_PLANTED)
@@ -233,7 +236,7 @@ def test_decayed_engagement_weights(spark, sf_dir_oracle):
             ((mx - r.ts).total_seconds() * 1_000_000)
             // (_DECAY_HALF_LIFE_S * 1_000_000))
         for r in ev if r.user_id == uid and r.value is not None)
-    got = {r.user_id: r.decayed_score for r in STAGED_QUERIES[
+    got = {r.user_id: r.decayed_score for r in QUERIES[
         "events_decayed_engagement"](spark, sf_dir_oracle).collect()}
     assert abs(got[uid] - want) < 1e-4, (got[uid], want)
 
@@ -244,7 +247,7 @@ def test_semantic_decontaminate_catches_planted(spark, sf_dir_oracle):
     and every flag must clear the threshold with its OWN twin as the
     argmax. At minimum the overwhelming majority of planted pairs land in
     the same 8-bit bucket (the perturbation barely moves plane dots)."""
-    rows = STAGED_QUERIES["embedding_semantic_decontaminate"](
+    rows = QUERIES["embedding_semantic_decontaminate"](
         spark, sf_dir_oracle).collect()
     got = {r.vec_id: r for r in rows}
     n_planted = len([i for i in range(_DECON_PLANTED) if i % 97 != 0])
@@ -268,7 +271,7 @@ def test_dsir_separates_target_from_raw(spark, sf_dir_oracle):
     langs = {r.doc_id: r.lang for r in
              load_table(spark, sf_dir_oracle, "documents")
              .select("doc_id", "lang").collect()}
-    rows = STAGED_QUERIES["doc_dsir_importance"](
+    rows = QUERIES["doc_dsir_importance"](
         spark, sf_dir_oracle).collect()
     assert len(rows) == len(langs)
     tgt = [r.dsir_logweight for r in rows
@@ -295,7 +298,7 @@ def test_winnowing_twins_and_cap_boundary(spark, sf_dir_oracle):
         _FP_PLANTED,
     )
 
-    rows = STAGED_QUERIES["doc_winnowing_fingerprint"](
+    rows = QUERIES["doc_winnowing_fingerprint"](
         spark, sf_dir_oracle).collect()
     pairs = {(r.doc_a, r.doc_b): r.n_shared for r in rows}
     caught = [i for i in range(_FP_PLANTED)
@@ -318,7 +321,7 @@ def test_novelty_copies_score_zero(spark, sf_dir_oracle):
         _NOV_PLANTED,
     )
 
-    rows = STAGED_QUERIES["doc_ngram_novelty"](spark, sf_dir_oracle).collect()
+    rows = QUERIES["doc_ngram_novelty"](spark, sf_dir_oracle).collect()
     got = {r.doc_id: r for r in rows}
     copies = [got[i + _NOV_OFFSET] for i in range(_NOV_PLANTED)
               if i + _NOV_OFFSET in got]
@@ -335,7 +338,7 @@ def test_temperature_weights_rebalance(spark, sf_dir_oracle):
     language size — the smallest language gets the largest up-weight and
     every below-uniform-share language boosts above its raw rate."""
     rows = sorted(
-        STAGED_QUERIES["lang_temperature_weights"](
+        QUERIES["lang_temperature_weights"](
             spark, sf_dir_oracle).collect(),
         key=lambda r: r.n_tokens)
     assert abs(sum(r.w_temp for r in rows) - 1.0) < 1e-5
@@ -363,7 +366,7 @@ def test_rollup_merge_is_nonvacuous_and_exact(spark, sf_dir_oracle):
     new = [r for r in ev if r.ts.timestamp() >= cutoff]
     assert old and new, "split is vacuous — move _IVM_SPLIT_DAYS"
 
-    rows = STAGED_QUERIES["events_rollup_merge"](
+    rows = QUERIES["events_rollup_merge"](
         spark, sf_dir_oracle).collect()
     assert sum(r.n for r in rows) == sum(1 for r in ev if r.value is not None)
     # one group recomputed raw: pick the type-hour of the newest event
@@ -385,7 +388,7 @@ def test_paragraph_dedup_planted(spark, sf_dir_oracle):
     paragraphs; of the literal pair sharing exactly one paragraph, the
     lower doc_id keeps it (plus its tail) and the higher keeps only its
     tail."""
-    df = STAGED_QUERIES["doc_paragraph_dedup"](spark, sf_dir_oracle)
+    df = QUERIES["doc_paragraph_dedup"](spark, sf_dir_oracle)
     rows = {r.doc_id: r for r in df.filter(
         (F.col("doc_id") >= 700000)).collect()}
     copies = [r for i, r in rows.items() if 700000 <= i < 700030]
@@ -400,7 +403,7 @@ def test_c4_page_rules_at_boundary(spark, sf_dir_oracle):
     """Each planted page decides its rule exactly at the boundary:
     3 kept lines pass, 2 fail; lorem/brace pages fail page-level even
     with enough kept lines; the JavaScript line-drop is case-folded."""
-    df = STAGED_QUERIES["doc_c4_line_filter"](spark, sf_dir_oracle)
+    df = QUERIES["doc_c4_line_filter"](spark, sf_dir_oracle)
     got = {r.doc_id: (r.n_kept, r.page_kept)
            for r in df.filter(F.col("doc_id") >= 730000).collect()}
     assert got == {
@@ -419,7 +422,7 @@ def test_gopher_rules_at_boundary(spark, sf_dir_oracle):
     """One planted doc per Gopher rule, sitting exactly ON the
     threshold: 50 words, mean length 3.0, alpha fraction 0.8, symbol
     ratio 0.1, 2 stopwords all PASS; one notch past each FAILS."""
-    df = STAGED_QUERIES["doc_gopher_quality"](spark, sf_dir_oracle)
+    df = QUERIES["doc_gopher_quality"](spark, sf_dir_oracle)
     got = {r.doc_id: r.passes
            for r in df.filter(F.col("doc_id") >= 750000).collect()}
     assert got == {
@@ -437,7 +440,7 @@ def test_compaction_exact_boundary_cut(spark, sf_dir_oracle):
     """A record whose start offset sits exactly on k*target must OPEN
     file k: the planted srcz source hits the boundary three times and
     must produce exactly this manifest."""
-    df = STAGED_QUERIES["shard_compaction_plan"](spark, sf_dir_oracle)
+    df = QUERIES["shard_compaction_plan"](spark, sf_dir_oracle)
     got = {r.file_id: (r.n_docs, r.total_bytes)
            for r in df.filter(F.col("source") == "srcz").collect()}
     assert got == {0: (2, 4096), 1: (1, 4096), 2: (2, 4096), 3: (1, 1)}
@@ -450,7 +453,7 @@ def test_jl_projection_nondegenerate(spark, sf_dir_oracle):
     from traffic_data_pipeline_spark.plans.staged_ops import JL_K
     from traffic_data_pipeline_spark.sources.tables import load_table
 
-    df = STAGED_QUERIES["embedding_jl_projection"](spark, sf_dir_oracle)
+    df = QUERIES["embedding_jl_projection"](spark, sf_dir_oracle)
     n_vecs = load_table(spark, sf_dir_oracle, "embeddings").count()
     stats = df.agg(
         F.count(F.lit(1)).alias("n"),
@@ -487,7 +490,7 @@ def test_pq_adc_centroid_vectors_reconstruct_exactly(spark, sf_dir_oracle):
     for v, adc, exact in seeds:
         assert adc == exact, f"seed {v}: adc {adc} != exact {exact}"
 
-    got = STAGED_QUERIES["embedding_pq_adc"](spark, sf_dir_oracle).collect()
+    got = QUERIES["embedding_pq_adc"](spark, sf_dir_oracle).collect()
     assert len(got) == PQ_TOP
     assert all(r.vec_id != PQ_QUERY_ID for r in got)
     assert all(r.adc_d2 >= 0 and r.exact_d2 >= 0 for r in got)
@@ -500,7 +503,7 @@ def test_margin_align_is_mutual_and_scores_sanely(spark, sf_dir_oracle):
     at most once), cosines are valid, and the margin normalizer
     behaves: margin > 1 iff the pair's cosine exceeds the mean of its
     two k-NN neighborhoods (the hub-suppression property)."""
-    got = STAGED_QUERIES["embedding_margin_align"](
+    got = QUERIES["embedding_margin_align"](
         spark, sf_dir_oracle).collect()
     assert got, "fixture produced no mutual pairs"
     a_ids = [r.a_id for r in got]
@@ -555,8 +558,8 @@ def test_staged_dirty_events_parity(spark, tmp_path_factory, sf_dir_oracle,
         if not dst.exists():
             os.symlink(f"{sf_dir_oracle}/{t}.parquet", dst)
     assert_matches_oracle(
-        STAGED_QUERIES[name](spark, str(out)),
-        STAGED_ORACLES[name], str(out))
+        QUERIES[name](spark, str(out)),
+        ORACLES[name], str(out))
 
 
 @pytest.mark.parametrize(
@@ -597,8 +600,8 @@ def test_staged_dirty_embeddings_parity(spark, tmp_path_factory,
         if not dst.exists():
             os.symlink(f"{sf_dir_oracle}/{t}.parquet", dst)
     assert_matches_oracle(
-        STAGED_QUERIES[name](spark, str(out)),
-        STAGED_ORACLES[name], str(out))
+        QUERIES[name](spark, str(out)),
+        ORACLES[name], str(out))
 
 
 def test_margin_align_zero_normalizer_parity(spark, tmp_path_factory):
@@ -631,9 +634,9 @@ def test_margin_align_zero_normalizer_parity(spark, tmp_path_factory):
         if not dst.exists():
             os.symlink(f"/root/testdata/sf0.01/{t}.parquet", dst)
     assert_matches_oracle(
-        STAGED_QUERIES["embedding_margin_align"](spark, str(out)),
-        STAGED_ORACLES["embedding_margin_align"], str(out))
-    rows = STAGED_QUERIES["embedding_margin_align"](
+        QUERIES["embedding_margin_align"](spark, str(out)),
+        ORACLES["embedding_margin_align"], str(out))
+    rows = QUERIES["embedding_margin_align"](
         spark, str(out)).collect()
     assert [(r.a_id, r.b_id, r.cosine, r.margin) for r in rows] == [
         (0, 1, 0.0, None)]
@@ -672,9 +675,9 @@ def test_margin_align_calibration_cap_binds_and_matches(
         if not dst.exists():
             os.symlink(f"/root/testdata/sf0.01/{t}.parquet", dst)
     assert_matches_oracle(
-        STAGED_QUERIES["embedding_margin_align"](spark, str(out)),
-        STAGED_ORACLES["embedding_margin_align"], str(out))
-    rows = STAGED_QUERIES["embedding_margin_align"](
+        QUERIES["embedding_margin_align"](spark, str(out)),
+        ORACLES["embedding_margin_align"], str(out))
+    rows = QUERIES["embedding_margin_align"](
         spark, str(out)).collect()
     # every emitted id sits inside its side's md5-ranked CAP prefix
     want_a = set(sorted(
@@ -695,7 +698,7 @@ def test_mixture_budget_allocation_invariants(spark, sf_dir_oracle):
     +1s go to the largest fractional remainders."""
     from traffic_data_pipeline_spark.plans.staged_ops import _ALLOC_BUDGET
 
-    rows = STAGED_QUERIES["mixture_budget_allocate"](
+    rows = QUERIES["mixture_budget_allocate"](
         spark, sf_dir_oracle).collect()
     assert sum(r.quota for r in rows) == _ALLOC_BUDGET
     assert all(r.extra in (0, 1) for r in rows)
@@ -729,7 +732,7 @@ def test_kanonymity_boundary_naturally_exercised(spark, sf_dir_oracle):
     sizes = {r["count"] for r in g.select("count").distinct().collect()}
     assert K_ANON - 1 in sizes and K_ANON in sizes
     # and the report's accounting is self-consistent
-    rows = STAGED_QUERIES["doc_kanonymity_report"](
+    rows = QUERIES["doc_kanonymity_report"](
         spark, sf_dir_oracle).collect()
     assert all(0 <= r.n_at_risk_rows <= r.n_rows for r in rows)
     assert any(r.min_k < K_ANON for r in rows)
@@ -746,7 +749,7 @@ def test_perplexity_buckets_cover_scored_docs(spark, sf_dir_oracle):
 
     from traffic_data_pipeline_spark.plans.llm_ops import q_doc_lm_score
 
-    rows = STAGED_QUERIES["doc_perplexity_buckets"](
+    rows = QUERIES["doc_perplexity_buckets"](
         spark, sf_dir_oracle).collect()
     n_scored = q_doc_lm_score(spark, sf_dir_oracle).count()
     assert len(rows) == n_scored
@@ -792,10 +795,10 @@ def test_zero_token_language_parity(spark, tmp_path_factory, sf_dir_oracle,
         if not dst.exists():
             os.symlink(f"{sf_dir_oracle}/{t}.parquet", dst)
     assert_matches_oracle(
-        STAGED_QUERIES[name](spark, str(out)),
-        STAGED_ORACLES[name], str(out))
+        QUERIES[name](spark, str(out)),
+        ORACLES[name], str(out))
     if name == "lang_temperature_weights":
-        row = [r for r in STAGED_QUERIES[name](spark, str(out)).collect()
+        row = [r for r in QUERIES[name](spark, str(out)).collect()
                if r.lang == "xx"][0]
         assert (row.n_tokens, row.p_raw, row.w_temp, row.boost) == \
             (0, 0.0, 0.0, None)
@@ -833,7 +836,7 @@ def test_kcore_matches_bruteforce_peel(spark, sf_dir_oracle):
     assert rounds <= _KCORE_UNROLL, rounds
     want = {v: len(adj[v] & alive) for v in alive}
     got = {r.doc_id: r.core_degree for r in
-           STAGED_QUERIES["dedup_graph_kcore"](
+           QUERIES["dedup_graph_kcore"](
                spark, sf_dir_oracle).collect()}
     assert got == want
     assert all(d >= KCORE_K for d in got.values())

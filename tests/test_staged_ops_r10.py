@@ -1,10 +1,10 @@
 """Oracle gate + semantic checks for the round-10 staging area
 (plans/staged_ops_r10.py) — the same query-vs-oracle compare every
 registered query passes, first run BEFORE these names entered the
-driver registry, kept after the round-10 promotion (the gate addresses
-each op by its staged name), plus the promotion check pinning that
-every staged r10 op is registered under the same function object and
-oracle."""
+driver registry, kept after the round-10 promotion (the gate selects
+the ops plans/staged_ops_r10.py defines), plus the promotion check
+pinning that every r10 op is registered under the same function object
+and oracle."""
 
 from __future__ import annotations
 
@@ -12,40 +12,41 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tests.oracle import assert_matches_oracle
-from traffic_data_pipeline_spark.plans.staged_ops_r10 import (
-    STAGED_R10_ORACLES,
-    STAGED_R10_QUERIES,
-)
+from tests.oracle import assert_matches_oracle, registered_in
+from traffic_data_pipeline_spark.plans import staged_ops_r10
+from traffic_data_pipeline_spark.plans.queries import ORACLES, QUERIES
+
+R10_NAMES = registered_in(staged_ops_r10)
 
 
-@pytest.mark.parametrize("name", sorted(STAGED_R10_ORACLES))
+@pytest.mark.parametrize("name", R10_NAMES)
 def test_staged_r10_matches_oracle(spark, sf_dir_oracle, name):
     assert_matches_oracle(
-        STAGED_R10_QUERIES[name](spark, sf_dir_oracle),
-        STAGED_R10_ORACLES[name], sf_dir_oracle)
+        QUERIES[name](spark, sf_dir_oracle),
+        ORACLES[name], sf_dir_oracle)
 
 
 # Exchange budgets live in tests/test_plan_shapes.py CAPS
 # (moved at promotion time, per the documented round-10 path); the oracle
-# gate above still addresses each op by its staged name.
+# gate above selects the ops this module defines (registered_in).
 
 
 def test_staged_r10_names_promoted():
     """Round-10 promotion check (VERDICT r9 ask #1, flipped from the
-    round-9 freeze guard): every staged r10 op is registered in the
-    driver registry under the SAME function object and oracle, every
-    one carries a DuckDB oracle, and every one has an exchange cap in
-    tests/test_plan_shapes.py."""
+    round-9 freeze guard): all 5 ops defined in plans/staged_ops_r10.py are
+    served by the driver registry under the SAME function object and
+    oracle, every one carries a DuckDB oracle, and every one has an
+    exchange cap in tests/test_plan_shapes.py."""
     import __spark_entry__ as e
     from tests.test_plan_shapes import CAPS
 
     live = e.queries()
     oracles = e.oracle_sql()
-    assert set(STAGED_R10_ORACLES) == set(STAGED_R10_QUERIES)
-    for name, fn in STAGED_R10_QUERIES.items():
-        assert live[name] is fn, name
-        assert oracles[name] == STAGED_R10_ORACLES[name], name
+    assert len(R10_NAMES) == 5
+    assert set(R10_NAMES) <= set(ORACLES)
+    for name in R10_NAMES:
+        assert live[name] is QUERIES[name], name
+        assert oracles[name] == ORACLES[name], name
         assert name in CAPS, name
 
 
@@ -56,7 +57,7 @@ def test_deltapresence_buckets_partition_cells(spark, sf_dir_oracle):
     carry their defining deltas (0.0 at delta=0, 1.0 at delta=1)."""
     from traffic_data_pipeline_spark.sources.tables import load_table
 
-    rows = STAGED_R10_QUERIES["events_user_deltapresence"](
+    rows = QUERIES["events_user_deltapresence"](
         spark, sf_dir_oracle).collect()
     assert rows
     n_cells = (load_table(spark, sf_dir_oracle, "events")
@@ -91,11 +92,10 @@ def test_qi_ladder_monotone_and_consistent(spark, sf_dir_oracle):
     non-decreasing; every rung accounts for the same event universe;
     and the hour rung's k>=K cell count matches the registered
     k-anonymity audit's bucket cube (same QI, same K boundary)."""
-    from traffic_data_pipeline_spark.plans.queries import QUERIES
     from traffic_data_pipeline_spark.plans.staged_ops_r10 import QI_LADDER
 
     rows = {r.qi_granularity: r
-            for r in STAGED_R10_QUERIES["events_qi_generalization_ladder"](
+            for r in QUERIES["events_qi_generalization_ladder"](
                 spark, sf_dir_oracle).collect()}
     assert set(rows) == {g for g, _ in QI_LADDER}
     ladder = [rows[g] for g, _ in QI_LADDER]  # fine -> coarse
@@ -129,9 +129,7 @@ def test_joint_cell_folds_to_both_registered_marginals(
     reproduces dedup_impact_by_lang's integer columns row-for-row, and
     folding over lang reproduces dedup_impact_by_source's — the
     Simpson's-paradox audit is an exact refinement, not a re-estimate."""
-    from traffic_data_pipeline_spark.plans.queries import QUERIES
-
-    joint = STAGED_R10_QUERIES["dedup_impact_by_lang_source"](
+    joint = QUERIES["dedup_impact_by_lang_source"](
         spark, sf_dir_oracle).collect()
     assert joint
 
@@ -208,7 +206,7 @@ def test_streaming_deltapresence_crash_replay_equals_batch(
 
     want = {(r.delta_bucket, r.n_cells, r.n_public_users,
              r.n_private_users, r.max_delta, r.cell_share)
-            for r in STAGED_R10_QUERIES["events_user_deltapresence"](
+            for r in QUERIES["events_user_deltapresence"](
                 spark, sf_dir_oracle).collect()}
 
     def cube():
@@ -235,10 +233,7 @@ def test_streaming_rfm_crash_replay_equals_batch(
     full order history, and a replay of the recorded last batch under
     its recorded batchId must change nothing."""
     from tests.streaming_replay import capturing, replay_last
-    from traffic_data_pipeline_spark.plans.queries import (
-        QUERIES,
-        run_available_now,
-    )
+    from traffic_data_pipeline_spark.plans.queries import run_available_now
     from traffic_data_pipeline_spark.plans.staged_ops_r10 import (
         _rfm_handle,
         _rfm_seed,

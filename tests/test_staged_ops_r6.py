@@ -12,50 +12,53 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tests.oracle import assert_matches_oracle
+from tests.oracle import assert_matches_oracle, registered_in
+from traffic_data_pipeline_spark.plans import staged_ops_r6
+from traffic_data_pipeline_spark.plans.queries import ORACLES, QUERIES
 from traffic_data_pipeline_spark.plans.staged_ops_r6 import (
     BOOT_B,
-    STAGED_R6_ORACLES,
-    STAGED_R6_QUERIES,
     TRUNC_K,
 )
 
+R6_NAMES = registered_in(staged_ops_r6)
 
-@pytest.mark.parametrize("name", sorted(STAGED_R6_ORACLES))
+
+@pytest.mark.parametrize("name", R6_NAMES)
 def test_staged_r6_matches_oracle(spark, sf_dir_oracle, name):
     assert_matches_oracle(
-        STAGED_R6_QUERIES[name](spark, sf_dir_oracle),
-        STAGED_R6_ORACLES[name], sf_dir_oracle)
+        QUERIES[name](spark, sf_dir_oracle),
+        ORACLES[name], sf_dir_oracle)
 
 
 # Exchange budgets for these ops live in tests/test_plan_shapes.py CAPS
 # (moved at promotion time, per the documented round-6 path); the oracle
-# gate above still addresses each op by its staged name.
+# gate above selects the ops this module defines (registered_in).
 
 
 def test_staged_r6_names_promoted():
     """Round-6 promotion check (VERDICT r5 ask #1, flipped from the
-    round-5 freeze guard): every staged r6 op is registered in the
-    driver registry under the SAME function object and oracle, every
-    one carries a DuckDB oracle, and every one has an exchange cap in
-    tests/test_plan_shapes.py."""
+    round-5 freeze guard): all 22 ops defined in plans/staged_ops_r6.py are
+    served by the driver registry under the SAME function object and
+    oracle, every one carries a DuckDB oracle, and every one has an
+    exchange cap in tests/test_plan_shapes.py."""
     import __spark_entry__ as e
     from tests.test_plan_shapes import CAPS
 
     live = e.queries()
     oracles = e.oracle_sql()
-    for name, fn in STAGED_R6_QUERIES.items():
-        assert live[name] is fn, name
-        assert oracles[name] == STAGED_R6_ORACLES[name], name
+    assert len(R6_NAMES) == 22
+    assert set(R6_NAMES) <= set(ORACLES)
+    for name in R6_NAMES:
+        assert live[name] is QUERIES[name], name
+        assert oracles[name] == ORACLES[name], name
         assert name in CAPS, name
-    assert set(STAGED_R6_ORACLES) == set(STAGED_R6_QUERIES)
 
 
 def test_attribution_shares_and_zero_touch(spark, sf_dir_oracle):
     """linear_share * n_touches reconstructs the purchase value for every
     attributed purchase (within the 6-dp rounding of the share), and
     zero-touch purchases carry NULL last click + NULL share — never 0."""
-    rows = STAGED_R6_QUERIES["events_attribution"](
+    rows = QUERIES["events_attribution"](
         spark, sf_dir_oracle).collect()
     assert rows
     seen_zero = seen_multi = False
@@ -74,7 +77,7 @@ def test_attribution_shares_and_zero_touch(spark, sf_dir_oracle):
 def test_markov_rows_stochastic_full_grid(spark, sf_dir_oracle):
     """K x K rows (zero cells included) and every smoothed row sums to 1
     within K half-ulps of the 6-dp rounding."""
-    rows = STAGED_R6_QUERIES["events_markov_transitions"](
+    rows = QUERIES["events_markov_transitions"](
         spark, sf_dir_oracle).collect()
     types = {r.src for r in rows}
     assert len(rows) == len(types) ** 2
@@ -89,7 +92,7 @@ def test_markov_rows_stochastic_full_grid(spark, sf_dir_oracle):
 def test_ab_proportions_recomputed(spark, sf_dir_oracle):
     """Recompute the z statistic from the emitted counters with plain
     python floats — an independent witness of the pooled-SE formula."""
-    r = STAGED_R6_QUERIES["events_ab_proportions"](
+    r = QUERIES["events_ab_proportions"](
         spark, sf_dir_oracle).collect()[0]
     assert r.n_a > 0 and r.n_b > 0
     pa, pb = r.x_a / r.n_a, r.x_b / r.n_b
@@ -106,7 +109,7 @@ def test_bootstrap_ci_brackets_the_median(spark, sf_dir_oracle):
     """Every event type carries exactly B replicas, an ordered CI, and —
     at the fixture's per-type sample sizes — the interval brackets the
     point median."""
-    rows = STAGED_R6_QUERIES["events_median_bootstrap_ci"](
+    rows = QUERIES["events_median_bootstrap_ci"](
         spark, sf_dir_oracle).collect()
     assert rows
     for r in rows:
@@ -122,7 +125,7 @@ def test_spend_concentration_matches_bruteforce(spark, sf_dir_oracle):
 
     from traffic_data_pipeline_spark.sources.tables import load_table
 
-    got = {r.event_type: r for r in STAGED_R6_QUERIES[
+    got = {r.event_type: r for r in QUERIES[
         "events_spend_concentration"](spark, sf_dir_oracle).collect()}
     ev = load_table(spark, sf_dir_oracle, "events").filter(
         F.col("event_type") == "view")
@@ -151,7 +154,7 @@ def test_whitening_diag_is_variance(spark, sf_dir_oracle):
     per-dimension population variance recomputed in python floats."""
     from traffic_data_pipeline_spark.sources.tables import load_table
 
-    rows = STAGED_R6_QUERIES["embedding_whitening_stats"](
+    rows = QUERIES["embedding_whitening_stats"](
         spark, sf_dir_oracle).collect()
     dims = max(r.i for r in rows)
     assert len(rows) == dims * (dims + 1) // 2
@@ -177,7 +180,7 @@ def test_truncation_recall_shape(spark, sf_dir_oracle):
     measured); chance for a random 5-of-499 pick is ~0.01, so > 0.03
     mean asserts the prefix genuinely correlates with the full metric
     without overfitting the fixture."""
-    rows = STAGED_R6_QUERIES["embedding_dim_truncation_recall"](
+    rows = QUERIES["embedding_dim_truncation_recall"](
         spark, sf_dir_oracle).collect()
     assert len(rows) == 10
     assert all(r.n_truth == TRUNC_K for r in rows)
@@ -191,9 +194,7 @@ def test_kneser_ney_aligns_with_addone_counts(spark, sf_dir_oracle):
     a negative mean log-prob, and the two models must disagree on values
     (if they ever collapsed to equal scores, the continuation term is
     dead code)."""
-    from traffic_data_pipeline_spark.plans.queries import QUERIES
-
-    kn = {r.doc_id: r for r in STAGED_R6_QUERIES["doc_lm_kneser_ney"](
+    kn = {r.doc_id: r for r in QUERIES["doc_lm_kneser_ney"](
         spark, sf_dir_oracle).collect()}
     ao = {r.doc_id: r for r in QUERIES["doc_lm_score"](
         spark, sf_dir_oracle).collect()}
@@ -207,7 +208,7 @@ def test_doremi_step_monotone_and_normalized(spark, sf_dir_oracle):
     """Weights renormalize to 1 (within rounding), excess is nonnegative,
     and the multiplicative update is monotone: a domain with larger
     excess gets a strictly larger new/old weight ratio."""
-    rows = STAGED_R6_QUERIES["corpus_doremi_step"](
+    rows = QUERIES["corpus_doremi_step"](
         spark, sf_dir_oracle).collect()
     assert len(rows) >= 2
     assert abs(sum(r.weight_new for r in rows) - 1.0) \
@@ -251,8 +252,8 @@ def test_staged_r6_dirty_text_parity(spark, tmp_path_factory, sf_dir_oracle,
         if not dst.exists():
             os.symlink(f"{sf_dir_oracle}/{t}.parquet", dst)
     assert_matches_oracle(
-        STAGED_R6_QUERIES[name](spark, str(out)),
-        STAGED_R6_ORACLES[name], str(out))
+        QUERIES[name](spark, str(out)),
+        ORACLES[name], str(out))
 
 
 def test_zonemap_probe_classifies_and_prunes(spark, sf_dir_oracle):
@@ -263,7 +264,7 @@ def test_zonemap_probe_classifies_and_prunes(spark, sf_dir_oracle):
         ZONEMAP_PROBE_DAYS,
     )
 
-    rows = STAGED_R6_QUERIES["events_time_zonemap_audit"](
+    rows = QUERIES["events_time_zonemap_audit"](
         spark, sf_dir_oracle).collect()
     assert rows
     lo, hi = ZONEMAP_PROBE_DAYS
@@ -308,14 +309,14 @@ def test_silhouette_planted_geometry(spark, tmp_path_factory):
               "orders", "lineitem", "events", "documents"]:
         os.symlink(f"/root/testdata/sf0.01/{t}.parquet",
                    out / f"{t}.parquet")
-    got = {r.label: r.mean_silhouette for r in STAGED_R6_QUERIES[
+    got = {r.label: r.mean_silhouette for r in QUERIES[
         "embedding_silhouette_by_label"](spark, str(out)).collect()}
     assert got[0] > 0.9 and got[1] > 0.9
     assert got[2] < 0
     # and the dirty-geometry corpus still hash-matches its oracle
     assert_matches_oracle(
-        STAGED_R6_QUERIES["embedding_silhouette_by_label"](spark, str(out)),
-        STAGED_R6_ORACLES["embedding_silhouette_by_label"], str(out))
+        QUERIES["embedding_silhouette_by_label"](spark, str(out)),
+        ORACLES["embedding_silhouette_by_label"], str(out))
 
 
 def test_ood_score_ranks_planted_outlier(spark, tmp_path_factory):
@@ -347,14 +348,14 @@ def test_ood_score_ranks_planted_outlier(spark, tmp_path_factory):
               "orders", "lineitem", "events", "documents"]:
         os.symlink(f"/root/testdata/sf0.01/{t}.parquet",
                    out / f"{t}.parquet")
-    rows = STAGED_R6_QUERIES["embedding_ood_score"](
+    rows = QUERIES["embedding_ood_score"](
         spark, str(out)).orderBy("rank").collect()
     assert [r.rank for r in rows] == list(range(1, OOD_TOP + 1))
     assert rows[0].vec_id == 7
     assert rows[0].mahalanobis_sq > 10 * rows[1].mahalanobis_sq
     assert_matches_oracle(
-        STAGED_R6_QUERIES["embedding_ood_score"](spark, str(out)),
-        STAGED_R6_ORACLES["embedding_ood_score"], str(out))
+        QUERIES["embedding_ood_score"](spark, str(out)),
+        ORACLES["embedding_ood_score"], str(out))
 
 
 def test_conversion_latency_profile(spark, sf_dir_oracle):
@@ -362,7 +363,7 @@ def test_conversion_latency_profile(spark, sf_dir_oracle):
     converted count is bounded by the purchase count."""
     from traffic_data_pipeline_spark.sources.tables import load_table
 
-    r = STAGED_R6_QUERIES["events_conversion_latency"](
+    r = QUERIES["events_conversion_latency"](
         spark, sf_dir_oracle).collect()[0]
     n_purch = load_table(spark, sf_dir_oracle, "events").filter(
         F.col("event_type") == "purchase").count()
@@ -401,7 +402,7 @@ def test_attribution_lookback_boundary(spark, tmp_path_factory):
               "orders", "lineitem", "documents", "embeddings"]:
         os.symlink(f"/root/testdata/sf0.01/{t}.parquet",
                    out / f"{t}.parquet")
-    rows = STAGED_R6_QUERIES["events_attribution"](
+    rows = QUERIES["events_attribution"](
         spark, str(out)).collect()
     assert len(rows) == 1
     r = rows[0]
@@ -409,8 +410,8 @@ def test_attribution_lookback_boundary(spark, tmp_path_factory):
     assert r.last_click_id == 4      # the at-purchase click wins last-touch
     assert abs(r.linear_share - round(50.0 / 3, 6)) <= 1e-9
     assert_matches_oracle(
-        STAGED_R6_QUERIES["events_attribution"](spark, str(out)),
-        STAGED_R6_ORACLES["events_attribution"], str(out))
+        QUERIES["events_attribution"](spark, str(out)),
+        ORACLES["events_attribution"], str(out))
 
 
 def test_churn_hazard_censoring_and_monotone_risk(spark, tmp_path_factory):
@@ -452,7 +453,7 @@ def test_churn_hazard_censoring_and_monotone_risk(spark, tmp_path_factory):
               "orders", "lineitem", "documents", "embeddings"]:
         os.symlink(f"/root/testdata/sf0.01/{t}.parquet",
                    out / f"{t}.parquet")
-    rows = {r.lifetime_days: r for r in STAGED_R6_QUERIES[
+    rows = {r.lifetime_days: r for r in QUERIES[
         "user_churn_hazard"](spark, str(out)).collect()}
     assert set(rows) == {0, 2}
     # d=2: users 1 (churned), 2 (boundary day: churned), 3 (censored)
@@ -463,8 +464,8 @@ def test_churn_hazard_censoring_and_monotone_risk(spark, tmp_path_factory):
         assert abs(r.hazard - round(r.n_churned / r.n_at_risk, 6)) <= 1e-9
     assert CHURN_CENSOR_DAYS == 7
     assert_matches_oracle(
-        STAGED_R6_QUERIES["user_churn_hazard"](spark, str(out)),
-        STAGED_R6_ORACLES["user_churn_hazard"], str(out))
+        QUERIES["user_churn_hazard"](spark, str(out)),
+        ORACLES["user_churn_hazard"], str(out))
 
 
 def test_session_funnel_stage_distribution(spark, sf_dir_oracle):
@@ -472,7 +473,7 @@ def test_session_funnel_stage_distribution(spark, sf_dir_oracle):
     and the lower stages all materialize at sf0.01. Full stage-3
     sessions are rare enough that the natural fixture has none — the
     restart test plants one explicitly, which is the stronger witness."""
-    rows = STAGED_R6_QUERIES["streaming_session_funnel"](
+    rows = QUERIES["streaming_session_funnel"](
         spark, sf_dir_oracle).collect()
     hist = {}
     for r in rows:
@@ -556,7 +557,7 @@ def test_zipf_alpha_recomputed(spark, sf_dir_oracle):
     from traffic_data_pipeline_spark.plans.staged_ops_r6 import ZIPF_XMIN
     from traffic_data_pipeline_spark.sources.tables import load_table
 
-    r = STAGED_R6_QUERIES["vocab_zipf_alpha"](
+    r = QUERIES["vocab_zipf_alpha"](
         spark, sf_dir_oracle).collect()[0]
     docs = load_table(spark, sf_dir_oracle, "documents")
     counts = {}
@@ -581,7 +582,7 @@ def test_heaps_law_recomputed(spark, sf_dir_oracle):
     from traffic_data_pipeline_spark.functions.text import tokens
     from traffic_data_pipeline_spark.sources.tables import load_table
 
-    rows = sorted(STAGED_R6_QUERIES["corpus_heaps_law"](
+    rows = sorted(QUERIES["corpus_heaps_law"](
         spark, sf_dir_oracle).collect(), key=lambda r: r.k)
     toks = [(r.doc_id, r.token) for r in
             tokens(load_table(spark, sf_dir_oracle, "documents")).collect()]
@@ -604,10 +605,9 @@ def test_lang_confusion_consistent_with_predictor(spark, sf_dir_oracle):
     """Cell counts must re-aggregate the registered predictor's exact
     per-doc output, shares sum to 1 per true language, and every
     diagonal share is that class's recall recomputed independently."""
-    from traffic_data_pipeline_spark.plans.queries import QUERIES
     from traffic_data_pipeline_spark.sources.tables import load_table
 
-    cells = STAGED_R6_QUERIES["lang_id_confusion"](
+    cells = QUERIES["lang_id_confusion"](
         spark, sf_dir_oracle).collect()
     pred = {r.doc_id: r.lang_pred for r in
             QUERIES["doc_lang_id"](spark, sf_dir_oracle).collect()}
@@ -632,7 +632,7 @@ def test_backlog_aging_partitions_open_orders(spark, sf_dir_oracle):
     from traffic_data_pipeline_spark.plans.staged_ops_r6 import AGING_EDGES
     from traffic_data_pipeline_spark.sources.tables import load_table
 
-    rows = {r.age_bucket: r for r in STAGED_R6_QUERIES[
+    rows = {r.age_bucket: r for r in QUERIES[
         "orders_backlog_aging"](spark, sf_dir_oracle).collect()}
     n_open = load_table(spark, sf_dir_oracle, "orders").filter(
         F.col("o_orderstatus") != "F").count()
@@ -676,14 +676,14 @@ def test_zipf_xmin_boundary(spark, tmp_path_factory):
               "orders", "lineitem", "events", "embeddings"]:
         os.symlink(f"/root/testdata/sf0.01/{t}.parquet",
                    out / f"{t}.parquet")
-    r = STAGED_R6_QUERIES["vocab_zipf_alpha"](spark, str(out)).collect()[0]
+    r = QUERIES["vocab_zipf_alpha"](spark, str(out)).collect()[0]
     # tail: edgefive(5) + filler/tokens/here/beyond/threshold (5 each)
     assert r.n_tail == 6
     assert r.v_total == 7           # + edgefour, excluded from the tail
     assert r.c_max == 5
     assert_matches_oracle(
-        STAGED_R6_QUERIES["vocab_zipf_alpha"](spark, str(out)),
-        STAGED_R6_ORACLES["vocab_zipf_alpha"], str(out))
+        QUERIES["vocab_zipf_alpha"](spark, str(out)),
+        ORACLES["vocab_zipf_alpha"], str(out))
 
 
 def test_burst_flags_window_and_threshold_edges(spark, tmp_path_factory):
@@ -732,7 +732,7 @@ def test_burst_flags_window_and_threshold_edges(spark, tmp_path_factory):
               "orders", "lineitem", "documents", "embeddings"]:
         os.symlink(f"/root/testdata/sf0.01/{t}.parquet",
                    out / f"{t}.parquet")
-    got = {r.user_id: r for r in STAGED_R6_QUERIES["events_burst_flags"](
+    got = {r.user_id: r for r in QUERIES["events_burst_flags"](
         spark, str(out)).collect()}
     assert got[1].max_burst_60s == 8 and got[1].flagged
     assert got[2].max_burst_60s == 7 and not got[2].flagged
@@ -742,14 +742,14 @@ def test_burst_flags_window_and_threshold_edges(spark, tmp_path_factory):
     assert got[3].max_burst_60s == 2 and not got[3].flagged
     assert got[3].burst_peak_at == "2024-01-01 12:00:59"
     assert_matches_oracle(
-        STAGED_R6_QUERIES["events_burst_flags"](spark, str(out)),
-        STAGED_R6_ORACLES["events_burst_flags"], str(out))
+        QUERIES["events_burst_flags"](spark, str(out)),
+        ORACLES["events_burst_flags"], str(out))
 
 
 def test_did_estimate_recomputed(spark, sf_dir_oracle):
     """Four cells (both cohorts x both periods at sf0.01), and the DiD
     estimate recomputes exactly from the emitted 6-dp cell means."""
-    rows = STAGED_R6_QUERIES["events_did_estimate"](
+    rows = QUERIES["events_did_estimate"](
         spark, sf_dir_oracle).collect()
     cells = {(r.cohort, r.period): r.mean_value for r in rows}
     assert set(cells) == {(0, "pre"), (0, "post"), (1, "pre"), (1, "post")}
@@ -768,7 +768,7 @@ def test_entropy_rate_recomputed(spark, sf_dir_oracle):
     from traffic_data_pipeline_spark.functions.text import tokens
     from traffic_data_pipeline_spark.sources.tables import load_table
 
-    r = STAGED_R6_QUERIES["corpus_entropy_rate"](
+    r = QUERIES["corpus_entropy_rate"](
         spark, sf_dir_oracle).collect()[0]
     stream = {}
     for row in tokens(load_table(spark, sf_dir_oracle, "documents"),

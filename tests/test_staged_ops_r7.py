@@ -10,42 +10,45 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tests.oracle import assert_matches_oracle
+from tests.oracle import assert_matches_oracle, registered_in
+from traffic_data_pipeline_spark.plans import staged_ops_r7
+from traffic_data_pipeline_spark.plans.queries import ORACLES, QUERIES
 from traffic_data_pipeline_spark.plans.staged_ops_r7 import (
     SAMPLE_BUDGET,
     SPAN_L,
-    STAGED_R7_ORACLES,
-    STAGED_R7_QUERIES,
 )
 
+R7_NAMES = registered_in(staged_ops_r7)
 
-@pytest.mark.parametrize("name", sorted(STAGED_R7_ORACLES))
+
+@pytest.mark.parametrize("name", R7_NAMES)
 def test_staged_r7_matches_oracle(spark, sf_dir_oracle, name):
     assert_matches_oracle(
-        STAGED_R7_QUERIES[name](spark, sf_dir_oracle),
-        STAGED_R7_ORACLES[name], sf_dir_oracle)
+        QUERIES[name](spark, sf_dir_oracle),
+        ORACLES[name], sf_dir_oracle)
 
 
 # Exchange budgets for these ops live in tests/test_plan_shapes.py CAPS
 # (moved at promotion time, per the documented round-7 path); the oracle
-# gate above still addresses each op by its staged name.
+# gate above selects the ops this module defines (registered_in).
 
 
 def test_staged_r7_names_promoted():
     """Round-7 promotion check (VERDICT r6 ask #1, flipped from the
-    round-6 freeze guard): every staged r7 op is registered in the
-    driver registry under the SAME function object and oracle, every
-    one carries a DuckDB oracle, and every one has an exchange cap in
-    tests/test_plan_shapes.py."""
+    round-6 freeze guard): all 31 ops defined in plans/staged_ops_r7.py are
+    served by the driver registry under the SAME function object and
+    oracle, every one carries a DuckDB oracle, and every one has an
+    exchange cap in tests/test_plan_shapes.py."""
     import __spark_entry__ as e
     from tests.test_plan_shapes import CAPS
 
     live = e.queries()
     oracles = e.oracle_sql()
-    assert set(STAGED_R7_ORACLES) == set(STAGED_R7_QUERIES)
-    for name, fn in STAGED_R7_QUERIES.items():
-        assert live[name] is fn, name
-        assert oracles[name] == STAGED_R7_ORACLES[name], name
+    assert len(R7_NAMES) == 31
+    assert set(R7_NAMES) <= set(ORACLES)
+    for name in R7_NAMES:
+        assert live[name] is QUERIES[name], name
+        assert oracles[name] == ORACLES[name], name
         assert name in CAPS, name
 
 
@@ -53,7 +56,7 @@ def test_fertility_drift_nonzero_for_edited_langs(spark, sf_dir_oracle):
     """The recrawl marker adds tokens, so every language containing an
     edited doc must show nonzero drift, and fertility stays >= 1 (the
     BPE regex never merges whitespace tokens)."""
-    rows = STAGED_R7_QUERIES["lang_fertility_drift"](
+    rows = QUERIES["lang_fertility_drift"](
         spark, sf_dir_oracle).collect()
     assert rows
     assert any(r.drift != 0 for r in rows)
@@ -68,7 +71,7 @@ def test_exact_spans_are_maximal_and_disjoint(spark, sf_dir_oracle):
     """Per doc: spans sorted by start must be disjoint with gaps > SPAN_L
     between island starts (maximality: two mergeable spans would have
     been one), and every span covers >= SPAN_L tokens."""
-    rows = STAGED_R7_QUERIES["dedup_exact_substring_spans"](
+    rows = QUERIES["dedup_exact_substring_spans"](
         spark, sf_dir_oracle).collect()
     assert rows
     by_doc = {}
@@ -87,7 +90,7 @@ def test_exact_spans_are_maximal_and_disjoint(spark, sf_dir_oracle):
 def test_stratified_sample_budget_exact(spark, sf_dir_oracle):
     """The sample hits the budget exactly, honors per-stratum quotas of
     the Hamilton allocation, and sample_rank is 1..q per stratum."""
-    rows = STAGED_R7_QUERIES["corpus_stratified_sample"](
+    rows = QUERIES["corpus_stratified_sample"](
         spark, sf_dir_oracle).collect()
     assert len(rows) == SAMPLE_BUDGET
     per = {}
@@ -98,7 +101,7 @@ def test_stratified_sample_budget_exact(spark, sf_dir_oracle):
 
 
 def test_cross_source_shares_sum_to_one(spark, sf_dir_oracle):
-    rows = STAGED_R7_QUERIES["dedup_cross_source_matrix"](
+    rows = QUERIES["dedup_cross_source_matrix"](
         spark, sf_dir_oracle).collect()
     assert rows
     assert all(r.source_a <= r.source_b for r in rows)
@@ -109,7 +112,7 @@ def test_cross_source_shares_sum_to_one(spark, sf_dir_oracle):
 def test_ivf_balance_consistency(spark, sf_dir_oracle):
     from traffic_data_pipeline_spark.plans.staged_ops_r7 import IVF_K
 
-    rows = STAGED_R7_QUERIES["embedding_ivf_balance_report"](
+    rows = QUERIES["embedding_ivf_balance_report"](
         spark, sf_dir_oracle).collect()
     assert len(rows) == IVF_K
     assert abs(sum(r.share for r in rows) - 1.0) <= IVF_K * 0.5e-6
@@ -120,7 +123,7 @@ def test_ivf_balance_consistency(spark, sf_dir_oracle):
 def test_benford_digits_and_chi2(spark, sf_dir_oracle):
     import math
 
-    rows = STAGED_R7_QUERIES["events_value_benford"](
+    rows = QUERIES["events_value_benford"](
         spark, sf_dir_oracle).collect()
     assert rows
     for r in rows:
@@ -136,7 +139,7 @@ def test_benford_digits_and_chi2(spark, sf_dir_oracle):
 
 
 def test_retention_day_zero_is_full(spark, sf_dir_oracle):
-    rows = STAGED_R7_QUERIES["events_retention_cohorts"](
+    rows = QUERIES["events_retention_cohorts"](
         spark, sf_dir_oracle).collect()
     assert rows
     for r in rows:
@@ -147,7 +150,7 @@ def test_retention_day_zero_is_full(spark, sf_dir_oracle):
 
 
 def test_repetition_profile_bounds(spark, sf_dir_oracle):
-    rows = STAGED_R7_QUERIES["doc_repetition_profile"](
+    rows = QUERIES["doc_repetition_profile"](
         spark, sf_dir_oracle).collect()
     assert rows
     for r in rows:
@@ -166,7 +169,7 @@ def test_repetition_profile_bounds(spark, sf_dir_oracle):
 def test_markov_removal_is_contraction(spark, sf_dir_oracle):
     """Pinning a state to 0 can only reduce absorption probability, so
     every removal effect sits in [0, 1] and p_removed <= p_base."""
-    rows = STAGED_R7_QUERIES["events_markov_removal_effect"](
+    rows = QUERIES["events_markov_removal_effect"](
         spark, sf_dir_oracle).collect()
     assert rows
     channels = {r.channel for r in rows}
@@ -178,7 +181,7 @@ def test_markov_removal_is_contraction(spark, sf_dir_oracle):
 
 
 def test_threshold_sweep_monotone(spark, sf_dir_oracle):
-    rows = sorted(STAGED_R7_QUERIES["dedup_threshold_sweep"](
+    rows = sorted(QUERIES["dedup_threshold_sweep"](
         spark, sf_dir_oracle).collect(), key=lambda r: r.agree_min)
     assert len(rows) == 5
     for lo, hi in zip(rows, rows[1:]):
@@ -191,7 +194,7 @@ def test_threshold_sweep_monotone(spark, sf_dir_oracle):
 def test_coverage_pmi_matches_lift(spark, sf_dir_oracle):
     import math
 
-    rows = STAGED_R7_QUERIES["corpus_lang_source_coverage"](
+    rows = QUERIES["corpus_lang_source_coverage"](
         spark, sf_dir_oracle).collect()
     assert rows
     for r in rows:
@@ -316,7 +319,7 @@ def test_streaming_minhash_index_crash_replay_exactly_once(
 
 
 def test_length_filter_curve_monotone(spark, sf_dir_oracle):
-    rows = sorted(STAGED_R7_QUERIES["corpus_length_filter_curve"](
+    rows = sorted(QUERIES["corpus_length_filter_curve"](
         spark, sf_dir_oracle).collect(), key=lambda r: r.decile)
     assert len(rows) == 10
     assert rows[0].doc_share == 1.0 and rows[0].token_share == 1.0
@@ -330,7 +333,7 @@ def test_length_filter_curve_monotone(spark, sf_dir_oracle):
 
 
 def test_centroid_drift_bounds(spark, sf_dir_oracle):
-    rows = STAGED_R7_QUERIES["embedding_centroid_drift"](
+    rows = QUERIES["embedding_centroid_drift"](
         spark, sf_dir_oracle).collect()
     assert rows
     for r in rows:
@@ -343,7 +346,7 @@ def test_centroid_drift_bounds(spark, sf_dir_oracle):
 
 
 def test_language_purity_consistency(spark, sf_dir_oracle):
-    rows = STAGED_R7_QUERIES["doc_language_purity"](
+    rows = QUERIES["doc_language_purity"](
         spark, sf_dir_oracle).collect()
     assert rows
     for r in rows:
@@ -354,7 +357,7 @@ def test_language_purity_consistency(spark, sf_dir_oracle):
 
 
 def test_burstiness_in_range(spark, sf_dir_oracle):
-    rows = STAGED_R7_QUERIES["events_interarrival_burstiness"](
+    rows = QUERIES["events_interarrival_burstiness"](
         spark, sf_dir_oracle).collect()
     assert rows
     for r in rows:
@@ -367,7 +370,7 @@ def test_burstiness_in_range(spark, sf_dir_oracle):
 def test_readability_recomposes_and_bounds(spark, sf_dir_oracle):
     """The two readability outputs must recompose from the reported
     group ratios (same linear formulas), and shares/counts stay lawful."""
-    rows = STAGED_R7_QUERIES["doc_readability"](
+    rows = QUERIES["doc_readability"](
         spark, sf_dir_oracle).collect()
     assert rows
     for r in rows:
@@ -393,7 +396,7 @@ def test_nb_langid_covers_every_eligible_test_doc(spark, sf_dir_oracle):
     )
     from traffic_data_pipeline_spark.sources.tables import load_table
 
-    rows = STAGED_R7_QUERIES["doc_nb_langid"](spark, sf_dir_oracle).collect()
+    rows = QUERIES["doc_nb_langid"](spark, sf_dir_oracle).collect()
     assert rows
     docs = load_table(spark, sf_dir_oracle, "documents")
     eligible = docs.filter(
@@ -436,7 +439,7 @@ def test_ivfpq_prunes_and_stays_in_probed_lists(spark, sf_dir_oracle):
         IVFPQ_TOP,
     )
 
-    rows = STAGED_R7_QUERIES["embedding_ivfpq_query"](
+    rows = QUERIES["embedding_ivfpq_query"](
         spark, sf_dir_oracle).collect()
     assert 0 < len(rows) <= IVFPQ_TOP
     lists = {r.list_id for r in rows}
@@ -454,7 +457,7 @@ def test_psi_nonnegative_and_zero_without_drift(spark, sf_dir_oracle,
     (doc_id % 11 != 0) the snapshots are identical and psi == 0 exactly."""
     from traffic_data_pipeline_spark.plans.staged_ops_r7 import PSI_ANCHORS
 
-    rows = STAGED_R7_QUERIES["corpus_token_psi_drift"](
+    rows = QUERIES["corpus_token_psi_drift"](
         spark, sf_dir_oracle).collect()
     assert rows
     for r in rows:
@@ -467,7 +470,7 @@ def test_psi_nonnegative_and_zero_without_drift(spark, sf_dir_oracle,
          for i in (1, 2, 3, 4, 5, 6)],
         "doc_id long, text string, lang string, source string, n_chars long")
     docs.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    flat = STAGED_R7_QUERIES["corpus_token_psi_drift"](
+    flat = QUERIES["corpus_token_psi_drift"](
         spark, str(tmp_path)).collect()
     assert len(flat) == 1
     assert flat[0].psi == 0.0
@@ -487,7 +490,7 @@ def test_ewma_constant_series_is_the_constant(spark, tmp_path):
         rows, "event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string"
     ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    out = STAGED_R7_QUERIES["events_ewma_forecast"](
+    out = QUERIES["events_ewma_forecast"](
         spark, str(tmp_path)).collect()
     assert len(out) == 1
     r = out[0]
@@ -517,7 +520,7 @@ def test_elasticity_recovers_planted_power_law(spark, tmp_path):
         "p_partkey long, p_name string, p_brand string, p_type string, "
         "p_size int, p_retailprice double"
     ).write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
-    out = STAGED_R7_QUERIES["part_price_elasticity"](
+    out = QUERIES["part_price_elasticity"](
         spark, str(tmp_path)).collect()
     assert len(out) == 1
     r = out[0]
@@ -547,7 +550,7 @@ def test_hhi_monopoly_and_uniform_split(spark, tmp_path):
         "p_partkey long, p_name string, p_brand string, p_type string, "
         "p_size int, p_retailprice double"
     ).write.mode("overwrite").parquet(str(tmp_path / "part.parquet"))
-    out = {r.p_type: r for r in STAGED_R7_QUERIES["supplier_share_hhi"](
+    out = {r.p_type: r for r in QUERIES["supplier_share_hhi"](
         spark, str(tmp_path)).collect()}
     assert out["MONO"].hhi == 10000.0
     assert out["MONO"].effective_suppliers == 1.0
@@ -581,7 +584,7 @@ def test_lead_lag_planted_shift_correlates_at_its_lag(spark, tmp_path):
               "event_type string, value double, props string"
     ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
     out = {(r.type_a, r.type_b, r.lag): r
-           for r in STAGED_R7_QUERIES["events_lead_lag_correlation"](
+           for r in QUERIES["events_lead_lag_correlation"](
                spark, str(tmp_path)).collect()}
     hit = out[("alpha", "beta", 2)]
     assert hit.corr == 1.0
@@ -615,7 +618,7 @@ def test_mmr_prefers_diversity_over_redundant_relevance(spark, tmp_path):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    out = sorted(STAGED_R7_QUERIES["embedding_mmr_topk"](
+    out = sorted(QUERIES["embedding_mmr_topk"](
         spark, str(tmp_path)).collect(), key=lambda r: r.pick_rank)
     assert [r.vec_id for r in out] == [1, 3, 2]
     assert out[0].relevance > out[1].relevance  # 3 picked DESPITE lower rel
@@ -642,7 +645,7 @@ def test_conformal_planted_predictable_series_covers_fully(spark,
         rows, "event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string"
     ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    out = STAGED_R7_QUERIES["events_conformal_volume"](
+    out = QUERIES["events_conformal_volume"](
         spark, str(tmp_path)).collect()
     assert len(out) == 1
     r = out[0]
@@ -660,7 +663,7 @@ def test_conformal_bounds_on_fixture(spark, sf_dir_oracle):
 
     from tests.oracle import duck_con
 
-    sql = STAGED_R7_ORACLES["events_conformal_volume"]
+    sql = ORACLES["events_conformal_volume"]
     prefix = sql.split("qh AS", 1)[0].rstrip().rstrip(",")
     con = duck_con(sf_dir_oracle)
     try:
@@ -674,7 +677,7 @@ def test_conformal_bounds_on_fixture(spark, sf_dir_oracle):
     for et, r in res:
         residuals.setdefault(et, []).append(float(r))
 
-    out = STAGED_R7_QUERIES["events_conformal_volume"](
+    out = QUERIES["events_conformal_volume"](
         spark, sf_dir_oracle).collect()
     assert out
     for r in out:
@@ -737,7 +740,7 @@ def test_streaming_ewma_restart_recovery(spark, sf_dir_oracle, tmp_path):
            for r in spark.read.parquet(level_dir).collect()}
     want = {(r.event_type, r.n_days, r.last_day_count, r.ewma_fast,
              r.ewma_slow, r.momentum)
-            for r in STAGED_R7_QUERIES["events_ewma_forecast"](
+            for r in QUERIES["events_ewma_forecast"](
                 spark, sf_dir_oracle).collect()}
     assert got == want
     # the mid-stream snapshot was a DIFFERENT (partial-history) level
@@ -771,7 +774,7 @@ def test_bpe_planted_banana_merge_sequence(spark, tmp_path):
         [(i, "banana", "en", "web", 6) for i in range(7)],
         "doc_id long, text string, lang string, source string, n_chars long")
     docs.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    rows = sorted(STAGED_R7_QUERIES["bpe_train_merges"](
+    rows = sorted(QUERIES["bpe_train_merges"](
         spark, str(tmp_path)).collect(), key=lambda r: r.rank)
     got = [(r.rank, r.left_sym, r.right_sym, r.cnt) for r in rows[:3]]
     assert got == [(1, "a", "n", 14), (2, "an", "a", 7), (3, "an", "ana", 7)]
@@ -785,7 +788,7 @@ def test_bpe_merge_count_is_nonincreasing_on_fixture(spark, sf_dir_oracle):
     merge can only destroy or preserve other pairs' counts at the
     moment it is chosen — so the chosen counts are non-increasing over
     rounds, and every emitted rank is present exactly once."""
-    rows = sorted(STAGED_R7_QUERIES["bpe_train_merges"](
+    rows = sorted(QUERIES["bpe_train_merges"](
         spark, sf_dir_oracle).collect(), key=lambda r: r.rank)
     from traffic_data_pipeline_spark.plans.staged_ops_r7 import (
         BPE_TRAIN_ROUNDS,
@@ -813,7 +816,7 @@ def test_weekday_decomposition_planted_periodic_series(spark, tmp_path):
         rows, "event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string"
     ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    out = {r.wd: r for r in STAGED_R7_QUERIES["events_weekday_decomposition"](
+    out = {r.wd: r for r in QUERIES["events_weekday_decomposition"](
         spark, str(tmp_path)).collect()}
     assert len(out) == 7
     for wd, r in out.items():
@@ -842,7 +845,7 @@ def test_control_chart_flags_planted_shift_not_steady_state(spark,
         rows, "event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string"
     ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    out = sorted(STAGED_R7_QUERIES["events_ewma_control_chart"](
+    out = sorted(QUERIES["events_ewma_control_chart"](
         spark, str(tmp_path)).collect(), key=lambda r: r.d)
     assert len(out) == 28
     for a, b in zip(out, out[1:]):
@@ -861,7 +864,7 @@ def test_control_chart_flags_planted_shift_not_steady_state(spark,
         rows2, "event_id long, ts timestamp, user_id long, "
                "event_type string, value double, props string"
     ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    flat = STAGED_R7_QUERIES["events_ewma_control_chart"](
+    flat = QUERIES["events_ewma_control_chart"](
         spark, str(tmp_path)).collect()
     assert all(r.flag == 0 for r in flat)
     assert all(r.ewma == r.mu for r in flat)
@@ -881,7 +884,7 @@ def test_control_chart_single_day_null_sigma_both_engines(spark, tmp_path):
         rows, "event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string"
     ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    out = STAGED_R7_QUERIES["events_ewma_control_chart"](
+    out = QUERIES["events_ewma_control_chart"](
         spark, str(tmp_path)).collect()
     assert len(out) == 2
     assert all(r.band is None and r.flag == 0 for r in out)
@@ -891,7 +894,7 @@ def test_control_chart_single_day_null_sigma_both_engines(spark, tmp_path):
             "CREATE VIEW events AS SELECT * FROM "
             f"read_parquet('{tmp_path}/events.parquet/*.parquet')")
         duck = con.sql(
-            STAGED_R7_ORACLES["events_ewma_control_chart"]).fetchall()
+            ORACLES["events_ewma_control_chart"]).fetchall()
     finally:
         con.close()
     assert len(duck) == 2
@@ -920,7 +923,7 @@ def test_mmr_ann_bucket_invariant_and_planted_twin_equality(spark,
 
     emb = load_table(spark, sf_dir_oracle, "embeddings")
     codes = {r.vec_id: r.bucket for r in lsh_bucket_codes(emb).collect()}
-    picks = STAGED_R7_QUERIES["embedding_mmr_topk_ann"](
+    picks = QUERIES["embedding_mmr_topk_ann"](
         spark, sf_dir_oracle).collect()
     assert picks
     for r in picks:
@@ -947,11 +950,11 @@ def test_mmr_ann_bucket_invariant_and_planted_twin_equality(spark,
           ).collect()}
     assert len(set(pc.values())) == 1        # planted premise holds
     ann = [(r.pick_rank, r.vec_id, r.relevance, r.mmr_score)
-           for r in sorted(STAGED_R7_QUERIES["embedding_mmr_topk_ann"](
+           for r in sorted(QUERIES["embedding_mmr_topk_ann"](
                spark, str(tmp_path)).collect(),
                key=lambda r: r.pick_rank)]
     brute = [(r.pick_rank, r.vec_id, r.relevance, r.mmr_score)
-             for r in sorted(STAGED_R7_QUERIES["embedding_mmr_topk"](
+             for r in sorted(QUERIES["embedding_mmr_topk"](
                  spark, str(tmp_path)).collect(),
                  key=lambda r: r.pick_rank)]
     assert ann == brute and len(ann) == 5

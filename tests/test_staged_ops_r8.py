@@ -1,9 +1,9 @@
 """Oracle gate + semantic checks for the round-8 staging area
 (plans/staged_ops_r8.py) — the same query-vs-oracle compare every
 registered query passes, first run BEFORE these names entered the
-driver registry, kept after the round-8 promotion (the gate addresses
-each op by its staged name), plus the promotion check pinning that
-every staged name is live with its oracle and exchange cap."""
+driver registry, kept after the round-8 promotion (the gate selects
+the ops plans/staged_ops_r8.py defines), plus the promotion check
+pinning that every one is live with its oracle and exchange cap."""
 
 from __future__ import annotations
 
@@ -11,40 +11,41 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tests.oracle import assert_matches_oracle
-from traffic_data_pipeline_spark.plans.staged_ops_r8 import (
-    STAGED_R8_ORACLES,
-    STAGED_R8_QUERIES,
-)
+from tests.oracle import assert_matches_oracle, registered_in
+from traffic_data_pipeline_spark.plans import staged_ops_r8
+from traffic_data_pipeline_spark.plans.queries import ORACLES, QUERIES
+
+R8_NAMES = registered_in(staged_ops_r8)
 
 
-@pytest.mark.parametrize("name", sorted(STAGED_R8_ORACLES))
+@pytest.mark.parametrize("name", R8_NAMES)
 def test_staged_r8_matches_oracle(spark, sf_dir_oracle, name):
     assert_matches_oracle(
-        STAGED_R8_QUERIES[name](spark, sf_dir_oracle),
-        STAGED_R8_ORACLES[name], sf_dir_oracle)
+        QUERIES[name](spark, sf_dir_oracle),
+        ORACLES[name], sf_dir_oracle)
 
 
 # Exchange budgets moved to tests/test_plan_shapes.py::CAPS
 # (moved at promotion time, per the documented round-8 path); the oracle
-# gate above still addresses each op by its staged name.
+# gate above selects the ops this module defines (registered_in).
 
 
 def test_staged_r8_names_promoted():
     """Round-8 promotion check (VERDICT r7 ask #1, flipped from the
-    round-7 freeze guard): every staged r8 op is registered in the
-    driver registry under the SAME function object and oracle, every
-    one carries a DuckDB oracle, and every one has an exchange cap in
-    tests/test_plan_shapes.py."""
+    round-7 freeze guard): all 16 ops defined in plans/staged_ops_r8.py are
+    served by the driver registry under the SAME function object and
+    oracle, every one carries a DuckDB oracle, and every one has an
+    exchange cap in tests/test_plan_shapes.py."""
     import __spark_entry__ as e
     from tests.test_plan_shapes import CAPS
 
     live = e.queries()
     oracles = e.oracle_sql()
-    assert set(STAGED_R8_ORACLES) == set(STAGED_R8_QUERIES)
-    for name, fn in STAGED_R8_QUERIES.items():
-        assert live[name] is fn, name
-        assert oracles[name] == STAGED_R8_ORACLES[name], name
+    assert len(R8_NAMES) == 16
+    assert set(R8_NAMES) <= set(ORACLES)
+    for name in R8_NAMES:
+        assert live[name] is QUERIES[name], name
+        assert oracles[name] == ORACLES[name], name
         assert name in CAPS, name
 
 
@@ -102,7 +103,7 @@ def test_streaming_conformal_crash_replay_equals_batch(
 
     want = {(r.event_type, r.n_train, r.n_cal, r.n_eval, r.qhat,
              r.coverage)
-            for r in STAGED_R8_QUERIES["streaming_conformal_monitor"](
+            for r in QUERIES["streaming_conformal_monitor"](
                 spark, sf_dir_oracle).collect()}
     assert published() == want
 
@@ -165,7 +166,7 @@ def test_streaming_ivf_index_crash_replay_equals_batch(
     run_once()
 
     want_report = {(r.centroid_id, r.n_assigned, r.share, r.imbalance)
-                   for r in STAGED_R8_QUERIES["streaming_ivf_index"](
+                   for r in QUERIES["streaming_ivf_index"](
                        spark, sf_dir_oracle).collect()}
 
     def report():
@@ -207,7 +208,7 @@ def test_rfm_segments_partition_customers(spark, sf_dir_oracle):
     from traffic_data_pipeline_spark.plans.staged_ops_r8 import RFM_BUCKETS
     from traffic_data_pipeline_spark.sources.tables import load_table
 
-    rows = STAGED_R8_QUERIES["orders_rfm_segmentation"](
+    rows = QUERIES["orders_rfm_segmentation"](
         spark, sf_dir_oracle).collect()
     assert rows
     n_cust = (load_table(spark, sf_dir_oracle, "orders")
@@ -259,7 +260,7 @@ def test_basket_lift_planted_association(spark, tmp_path):
         if not dst.exists():
             os.symlink(f"/root/testdata/sf0.01/{t}.parquet", dst)
     got = {(r.type_a, r.type_b): (r.n_co, r.lift, r.support)
-           for r in STAGED_R8_QUERIES["lineitem_basket_lift"](
+           for r in QUERIES["lineitem_basket_lift"](
                spark, str(tmp_path)).collect()}
     assert got[("A", "B")][0] == 4
     assert got[("A", "B")][1] == 3.0          # 4 * 12 / (4 * 4)
@@ -298,7 +299,7 @@ def test_lead_time_percentiles_planted(spark, tmp_path):
         dst = tmp_path / f"{t}.parquet"
         if not dst.exists():
             os.symlink(f"/root/testdata/sf0.01/{t}.parquet", dst)
-    rows = STAGED_R8_QUERIES["supplier_lead_time_percentiles"](
+    rows = QUERIES["supplier_lead_time_percentiles"](
         spark, str(tmp_path)).collect()
     assert len(rows) == 1
     r = rows[0]
@@ -313,7 +314,7 @@ def test_hill_tail_index_consistency(spark, sf_dir_oracle):
     from traffic_data_pipeline_spark.plans.staged_ops_r8 import HILL_K
     from traffic_data_pipeline_spark.sources.tables import load_table
 
-    rows = STAGED_R8_QUERIES["events_user_tail_index"](
+    rows = QUERIES["events_user_tail_index"](
         spark, sf_dir_oracle).collect()
     assert rows
     ev = load_table(spark, sf_dir_oracle, "events")
@@ -346,7 +347,7 @@ def test_changepoint_planted_shift(spark, tmp_path):
         rows, "event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string"
     ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    out = STAGED_R8_QUERIES["events_changepoint_daily"](
+    out = QUERIES["events_changepoint_daily"](
         spark, str(tmp_path)).collect()
     assert len(out) == 1
     r = out[0]
@@ -373,7 +374,7 @@ def test_novelty_planted_redundant_addition(spark, tmp_path):
         docs, "doc_id long, text string, lang string, source string, "
               "n_chars long"
     ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    out = STAGED_R8_QUERIES["corpus_snapshot_novelty_rate"](
+    out = QUERIES["corpus_snapshot_novelty_rate"](
         spark, str(tmp_path)).collect()
     assert len(out) == 1
     r = out[0]
@@ -384,7 +385,7 @@ def test_novelty_planted_redundant_addition(spark, tmp_path):
 def test_ablation_bounds_and_reconciliation(spark, sf_dir_oracle):
     """Unique kills never exceed fails, dropping a rule never lowers the
     pass count, and every rule reports once over the same doc universe."""
-    rows = STAGED_R8_QUERIES["doc_quality_rule_ablation"](
+    rows = QUERIES["doc_quality_rule_ablation"](
         spark, sf_dir_oracle).collect()
     assert sorted(r.rule for r in rows) == \
         ["alpha", "nwords", "stop", "sym", "wordlen"]
@@ -408,7 +409,7 @@ def test_recall_curve_monotone_and_exact_at_full_probe(spark,
         RECALL_PROBES,
     )
 
-    rows = sorted(STAGED_R8_QUERIES["embedding_ann_recall_curve"](
+    rows = sorted(QUERIES["embedding_ann_recall_curve"](
         spark, sf_dir_oracle).collect(), key=lambda r: r.n_probe)
     assert [r.n_probe for r in rows] == RECALL_PROBES
     assert rows[-1].recall == 1.0
@@ -425,7 +426,7 @@ def test_pq_distortion_shares_and_bounds(spark, sf_dir_oracle):
     population, and means are nonnegative."""
     from traffic_data_pipeline_spark.plans.staged_ops import PQ_M
 
-    rows = STAGED_R8_QUERIES["embedding_pq_distortion_report"](
+    rows = QUERIES["embedding_pq_distortion_report"](
         spark, sf_dir_oracle).collect()
     assert len(rows) == PQ_M
     assert len({r.n_vectors for r in rows}) == 1
@@ -473,7 +474,7 @@ def test_cross_elasticity_planted_power_law(spark, tmp_path):
         if not dst.exists():
             os.symlink(f"/root/testdata/sf0.01/{t}.parquet", dst)
     got = {(r.type_qty, r.type_price): r.cross_elasticity
-           for r in STAGED_R8_QUERIES["part_cross_price_elasticity"](
+           for r in QUERIES["part_cross_price_elasticity"](
                spark, str(tmp_path)).collect()}
     assert got[("A", "B")] == 2.0
     assert got[("B", "B")] == 0.0  # B's qty is constant 1 -> zero slope
@@ -534,7 +535,7 @@ def test_streaming_pq_codes_crash_replay_equals_batch(
            for r in spark.read.parquet(code_dir).distinct()
            .select("vec_id", "m", "code").collect()}
     want = {(r.vec_id, r.m, r.code)
-            for r in STAGED_R8_QUERIES["streaming_pq_codes"](
+            for r in QUERIES["streaming_pq_codes"](
                 spark, sf_dir_oracle).collect()}
     assert got == want
     raw = spark.read.parquet(code_dir).count()
@@ -547,7 +548,7 @@ def test_kanonymity_buckets_partition_cells(spark, sf_dir_oracle):
     1); a cell's events >= its distinct users, so n_events >=
     n_user_slots >= n_cells per bucket; and singleton cells carry
     exactly one user slot each."""
-    rows = STAGED_R8_QUERIES["events_user_kanonymity"](
+    rows = QUERIES["events_user_kanonymity"](
         spark, sf_dir_oracle).collect()
     assert rows
     assert abs(sum(r.cell_share for r in rows) - 1.0) <= len(rows) * 1e-6
@@ -563,7 +564,7 @@ def test_dedup_impact_reconciles_with_pair_stream(spark, sf_dir_oracle):
     bounded by the language's token mass."""
     from traffic_data_pipeline_spark.plans.extensions import doc_lsh_pairs
 
-    rows = STAGED_R8_QUERIES["dedup_impact_by_lang"](
+    rows = QUERIES["dedup_impact_by_lang"](
         spark, sf_dir_oracle).collect()
     assert rows
     want_removed = (doc_lsh_pairs(spark, sf_dir_oracle)
@@ -582,7 +583,7 @@ def test_scd2_compaction_counts_reconcile(spark, sf_dir_oracle):
     state's row count — the op is an aggregate of those exact frames."""
     from traffic_data_pipeline_spark.plans.queries import _scd2_multiday
 
-    rows = STAGED_R8_QUERIES["config_scd2_compaction_stats"](
+    rows = QUERIES["config_scd2_compaction_stats"](
         spark, sf_dir_oracle).collect()
     assert rows
     state, changelog = _scd2_multiday(spark, sf_dir_oracle)

@@ -1,9 +1,9 @@
 """Oracle gate + semantic checks for the round-9 staging area
 (plans/staged_ops_r9.py) — the same query-vs-oracle compare every
 registered query passes, first run BEFORE these names entered the
-driver registry, kept after the round-9 promotion (the gate addresses
-each op by its staged name), plus the promotion check pinning that
-every staged name is live with its oracle and exchange cap."""
+driver registry, kept after the round-9 promotion (the gate selects
+the ops plans/staged_ops_r9.py defines), plus the promotion check
+pinning that every one is live with its oracle and exchange cap."""
 
 from __future__ import annotations
 
@@ -11,40 +11,41 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tests.oracle import assert_matches_oracle
-from traffic_data_pipeline_spark.plans.staged_ops_r9 import (
-    STAGED_R9_ORACLES,
-    STAGED_R9_QUERIES,
-)
+from tests.oracle import assert_matches_oracle, registered_in
+from traffic_data_pipeline_spark.plans import staged_ops_r9
+from traffic_data_pipeline_spark.plans.queries import ORACLES, QUERIES
+
+R9_NAMES = registered_in(staged_ops_r9)
 
 
-@pytest.mark.parametrize("name", sorted(STAGED_R9_ORACLES))
+@pytest.mark.parametrize("name", R9_NAMES)
 def test_staged_r9_matches_oracle(spark, sf_dir_oracle, name):
     assert_matches_oracle(
-        STAGED_R9_QUERIES[name](spark, sf_dir_oracle),
-        STAGED_R9_ORACLES[name], sf_dir_oracle)
+        QUERIES[name](spark, sf_dir_oracle),
+        ORACLES[name], sf_dir_oracle)
 
 
 # Exchange budgets moved to tests/test_plan_shapes.py::CAPS
 # (moved at promotion time, per the documented round-9 path); the oracle
-# gate above still addresses each op by its staged name.
+# gate above selects the ops this module defines (registered_in).
 
 
 def test_staged_r9_names_promoted():
     """Round-9 promotion check (VERDICT r8 ask #1, flipped from the
-    round-8 freeze guard): every staged r9 op is registered in the
-    driver registry under the SAME function object and oracle, every
-    one carries a DuckDB oracle, and every one has an exchange cap in
-    tests/test_plan_shapes.py."""
+    round-8 freeze guard): all 7 ops defined in plans/staged_ops_r9.py are
+    served by the driver registry under the SAME function object and
+    oracle, every one carries a DuckDB oracle, and every one has an
+    exchange cap in tests/test_plan_shapes.py."""
     import __spark_entry__ as e
     from tests.test_plan_shapes import CAPS
 
     live = e.queries()
     oracles = e.oracle_sql()
-    assert set(STAGED_R9_ORACLES) == set(STAGED_R9_QUERIES)
-    for name, fn in STAGED_R9_QUERIES.items():
-        assert live[name] is fn, name
-        assert oracles[name] == STAGED_R9_ORACLES[name], name
+    assert len(R9_NAMES) == 7
+    assert set(R9_NAMES) <= set(ORACLES)
+    for name in R9_NAMES:
+        assert live[name] is QUERIES[name], name
+        assert oracles[name] == ORACLES[name], name
         assert name in CAPS, name
 
 
@@ -54,7 +55,7 @@ def test_ldiversity_buckets_partition_cells(spark, sf_dir_oracle):
     sums to 1, and every bucket label is one of the four."""
     from traffic_data_pipeline_spark.sources.tables import load_table
 
-    rows = STAGED_R9_QUERIES["events_user_ldiversity"](
+    rows = QUERIES["events_user_ldiversity"](
         spark, sf_dir_oracle).collect()
     assert rows
     n_cells = (load_table(spark, sf_dir_oracle, "events")
@@ -74,10 +75,10 @@ def test_tcloseness_buckets_partition_cells(spark, sf_dir_oracle):
     the l-diversity audit (identical value-not-null filter), cell_share
     sums to 1, every TVD is in [0, 1], and bucket max_tvd values respect
     the bucket edges."""
-    rows = STAGED_R9_QUERIES["events_user_tcloseness"](
+    rows = QUERIES["events_user_tcloseness"](
         spark, sf_dir_oracle).collect()
     assert rows
-    ld = STAGED_R9_QUERIES["events_user_ldiversity"](
+    ld = QUERIES["events_user_ldiversity"](
         spark, sf_dir_oracle).collect()
     assert sum(r.n_cells for r in rows) == sum(r.n_cells for r in ld)
     assert abs(sum(r.cell_share for r in rows) - 1.0) < 1e-4
@@ -93,13 +94,10 @@ def test_source_and_lang_impact_agree_on_totals(spark, sf_dir_oracle):
     """The two marginals of the same one-round removal set must agree on
     the corpus totals: sum of n_docs / n_removed / tokens_removed over
     sources equals the sum over languages."""
-    from traffic_data_pipeline_spark.plans.staged_ops_r8 import (
-        STAGED_R8_QUERIES,
-    )
 
-    by_src = STAGED_R9_QUERIES["dedup_impact_by_source"](
+    by_src = QUERIES["dedup_impact_by_source"](
         spark, sf_dir_oracle).collect()
-    by_lang = STAGED_R8_QUERIES["dedup_impact_by_lang"](
+    by_lang = QUERIES["dedup_impact_by_lang"](
         spark, sf_dir_oracle).collect()
     for col in ("n_docs", "n_removed", "n_tokens", "tokens_removed"):
         assert (sum(getattr(r, col) for r in by_src)
@@ -115,7 +113,7 @@ def test_epoch_plan_identities(spark, sf_dir_oracle):
         EPOCH_RISK,
     )
 
-    rows = STAGED_R9_QUERIES["corpus_epoch_plan"](
+    rows = QUERIES["corpus_epoch_plan"](
         spark, sf_dir_oracle).collect()
     assert rows
     total = sum(r.n_tokens for r in rows)
@@ -139,13 +137,10 @@ def test_cc_impact_dominates_one_round_rule(spark, sf_dir_oracle):
     non-minimal in its component), so per language n_removed_cc >=
     n_removed_one_round, with equal corpus totals (n_docs, n_tokens) —
     the two audits are the same fold under different survivor rules."""
-    from traffic_data_pipeline_spark.plans.staged_ops_r8 import (
-        STAGED_R8_QUERIES,
-    )
 
-    cc = {r.lang: r for r in STAGED_R9_QUERIES["dedup_impact_by_lang_cc"](
+    cc = {r.lang: r for r in QUERIES["dedup_impact_by_lang_cc"](
         spark, sf_dir_oracle).collect()}
-    one = {r.lang: r for r in STAGED_R8_QUERIES["dedup_impact_by_lang"](
+    one = {r.lang: r for r in QUERIES["dedup_impact_by_lang"](
         spark, sf_dir_oracle).collect()}
     assert set(cc) == set(one)
     assert any(cc[la].n_removed > 0 for la in cc)
@@ -164,9 +159,6 @@ def test_streaming_changepoint_crash_replay_equals_batch(
     must equal the batch op on the full history once the history is
     complete, and the replay must change nothing."""
     from traffic_data_pipeline_spark.plans.queries import run_available_now
-    from traffic_data_pipeline_spark.plans.staged_ops_r8 import (
-        STAGED_R8_QUERIES,
-    )
     from traffic_data_pipeline_spark.plans.staged_ops_r9 import (
         _changepoint_handle,
         _changepoint_seed,
@@ -209,7 +201,7 @@ def test_streaming_changepoint_crash_replay_equals_batch(
     run_once()
 
     want = {(r.event_type, r.change_d, r.score, r.mean_before, r.mean_after)
-            for r in STAGED_R8_QUERIES["events_changepoint_daily"](
+            for r in QUERIES["events_changepoint_daily"](
                 spark, sf_dir_oracle).collect()}
 
     def report():
@@ -239,9 +231,6 @@ def test_streaming_tailindex_crash_replay_equals_batch(
     history, and a replay of the last batch under its original batchId
     must change nothing."""
     from traffic_data_pipeline_spark.plans.queries import run_available_now
-    from traffic_data_pipeline_spark.plans.staged_ops_r8 import (
-        STAGED_R8_QUERIES,
-    )
     from traffic_data_pipeline_spark.plans.staged_ops_r9 import (
         _tailindex_handle,
         _tailindex_seed,
@@ -285,7 +274,7 @@ def test_streaming_tailindex_crash_replay_equals_batch(
     run_once()
 
     want = {(r.event_type, r.n_users, r.k_used, r.x_cut, r.hill_alpha)
-            for r in STAGED_R8_QUERIES["events_user_tail_index"](
+            for r in QUERIES["events_user_tail_index"](
                 spark, sf_dir_oracle).collect()}
 
     def report():

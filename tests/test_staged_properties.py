@@ -13,6 +13,7 @@ import re
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
+from traffic_data_pipeline_spark.plans.queries import QUERIES
 from traffic_data_pipeline_spark.plans.staged_ops import (
     _C4_DOCS,
     _COMPACT_ROWS,
@@ -27,7 +28,6 @@ from traffic_data_pipeline_spark.plans.staged_ops import (
     GQ_MIN_STOPWORDS,
     GQ_MIN_WORDS,
     PARA_TOKENS,
-    STAGED_QUERIES,
 )
 from traffic_data_pipeline_spark.functions.text import STOPWORDS_EN
 
@@ -101,7 +101,7 @@ def test_paragraph_dedup_matches_brute_force(spark, tmp_path_factory, docs):
                  (720001, f"{_PARA_SHARED} zptc")])
     want = _brute_paragraphs(corpus)
     got = {r.doc_id: (r.n_paras, r.n_kept, r.dedup_text)
-           for r in STAGED_QUERIES["doc_paragraph_dedup"](
+           for r in QUERIES["doc_paragraph_dedup"](
                spark, sf).collect()}
     assert got == want
 
@@ -156,7 +156,7 @@ def test_c4_filter_matches_brute_force(spark, tmp_path_factory, docs):
     want = {i: _brute_c4(t) for i, t in corpus}
     got = {r.doc_id: (r.n_lines, r.n_kept, r.has_lorem, r.has_brace,
                       r.page_kept, r.kept_text)
-           for r in STAGED_QUERIES["doc_c4_line_filter"](
+           for r in QUERIES["doc_c4_line_filter"](
                spark, sf).collect()}
     assert got == want
 
@@ -203,7 +203,7 @@ def test_gopher_matches_brute_force(spark, tmp_path_factory, docs):
     got = {r.doc_id: (r.n_words, r.total_chars, r.n_alpha, r.n_stop,
                       r.n_sym, r.ok_nwords, r.ok_wordlen, r.ok_alpha,
                       r.ok_sym, r.ok_stop, r.passes)
-           for r in STAGED_QUERIES["doc_gopher_quality"](
+           for r in QUERIES["doc_gopher_quality"](
                spark, sf).collect()}
     assert got == want
 
@@ -244,7 +244,7 @@ def test_compaction_matches_brute_force(spark, tmp_path_factory, rows):
     want = _brute_compaction(gen + list(_COMPACT_ROWS))
     got = {(r.source, r.file_id): (r.n_docs, r.total_bytes,
                                    r.first_doc, r.last_doc)
-           for r in STAGED_QUERIES["shard_compaction_plan"](
+           for r in QUERIES["shard_compaction_plan"](
                spark, sf).collect()}
     assert got == want
 
@@ -312,7 +312,7 @@ def test_cms_matches_brute_force(spark, tmp_path_factory, uids):
     expect = sorted(((e, u) for u, e in est.items()),
                     key=lambda t: (-t[0], t[1]))[:CMS_TOP]
 
-    got = STAGED_QUERIES["events_heavy_hitters_cms"](spark, sf).collect()
+    got = QUERIES["events_heavy_hitters_cms"](spark, sf).collect()
     assert [(r.est, r.user_id) for r in got] == expect
     for r in got:
         assert r.exact == exact[r.user_id]
@@ -387,7 +387,7 @@ def test_theilsen_matches_brute_force(spark, tmp_path_factory, series):
             expect[str(sensor)] = (
                 len(pts), len(slopes), slopes[(len(slopes) + 1) // 2 - 1])
 
-    got = STAGED_QUERIES["sensor_theilsen_trend"](spark, sf).collect()
+    got = QUERIES["sensor_theilsen_trend"](spark, sf).collect()
     assert {r.sensor for r in got} == set(expect)
     for r in got:
         n_days, n_pairs, slope = expect[r.sensor]
@@ -424,7 +424,7 @@ def test_skew_report_matches_brute_force(spark, tmp_path_factory, counts):
     gini = (2 * s_ic - (n_keys + 1) * n_rows) / (n_keys * n_rows)
     salt = (max_c * n_keys - 1) // n_rows + 1
 
-    got = STAGED_QUERIES["events_key_skew_report"](spark, sf).collect()
+    got = QUERIES["events_key_skew_report"](spark, sf).collect()
     assert len(got) == 1
     r = got[0]
     assert (r.n_keys, r.n_rows, r.max_c, r.top_key, r.salt_factor) == (
@@ -506,7 +506,7 @@ def test_pq_adc_matches_brute_force(spark, tmp_path_factory, vecs):
         scored.append((adc, i, d2(v, q)))
     expect = [(i, a, e) for a, i, e in sorted(scored)[:PQ_TOP]]
 
-    got = STAGED_QUERIES["embedding_pq_adc"](spark, sf).collect()
+    got = QUERIES["embedding_pq_adc"](spark, sf).collect()
     assert [(r.vec_id, r.adc_d2, r.exact_d2) for r in got] == expect
 
 
@@ -558,7 +558,7 @@ def test_margin_align_matches_brute_force(spark, tmp_path_factory, rows):
             expect[(a, b)] = (c[(a, b)] / denom
                               if abs(denom) >= 1e-3 else None)
 
-    got = STAGED_QUERIES["embedding_margin_align"](spark, sf).collect()
+    got = QUERIES["embedding_margin_align"](spark, sf).collect()
     assert {(r.a_id, r.b_id) for r in got} == set(expect)
     for r in got:
         want = expect[(r.a_id, r.b_id)]
@@ -623,7 +623,7 @@ def test_late_arrival_audit_matches_brute_force(spark, tmp_path_factory,
         for h, ls in per_hour.items()}
 
     got = {r.hour: (r.n_rows, r.dropped_10m, r.dropped_1h, r.max_lateness_s)
-           for r in STAGED_QUERIES["events_late_arrival_audit"](
+           for r in QUERIES["events_late_arrival_audit"](
                spark, sf).collect()}
     assert got == expect
 

@@ -34,6 +34,7 @@ from traffic_data_pipeline_spark.operators.rollup import (
     two_level_rollup,
 )
 from traffic_data_pipeline_spark.operators.scd2 import initial_state, scd2_apply
+from traffic_data_pipeline_spark.streaming.pipeline import high_water_mark
 
 LATENESS_DAYS = 3  # /root/reference/R/4) Update-SensorData-Nightly.R:11
 
@@ -62,10 +63,11 @@ def run_nightly_ingest(spark: SparkSession, sf_dir: str, fact_path: str,
     ``today - LATENESS_DAYS`` (S9 + T3), overwriting just those date
     partitions. Returns the rows written.
     """
-    fact = build_rtmc_15min(spark, sf_dir)
-    if _exists(spark, fact_path):
-        hwm = (spark.read.parquet(fact_path)
-               .agg(F.max("START_DATE")).first()[0])
+    # not the session's cached fact: new nights land under the same
+    # sf_dir between calls, and the cache is keyed by that path
+    fact = build_rtmc_15min(spark, sf_dir, use_cache=False)
+    hwm = high_water_mark(spark, fact_path)
+    if hwm is not None:
         fact = fact.filter(F.col("START_DATE") > F.lit(hwm))
         if today is not None:
             cutoff = today - dt.timedelta(days=LATENESS_DAYS)
@@ -98,17 +100,10 @@ def run_config_update(spark: SparkSession, snapshot: DataFrame,
     new_state.write.mode("overwrite").parquet(state_path)
 
 
-def run_model_build(spark: SparkSession, fact_path: str, dim: DataFrame,
-                    predict_path: str, train_before: str,
-                    spine_start: str, spine_stop: str,
-                    time_level: str = "hour",
-                    qaqc_args: dict | None = None) -> DataFrame:
-    """§3.2: roll-up -> validity join -> QAQC -> per-node GLM -> predictions.
-
-    ``dim`` is the SCD-2 state; predictions land partitioned by node so a
-    re-run of a node batch overwrites only that node (the reference's
-    30-node commit unit, /root/reference/R/_analyze_data.R:179-182).
-    """
+def _qaqc_actuals(spark: SparkSession, fact_path: str, dim: DataFrame,
+                  time_level: str, qaqc_args: dict | None) -> DataFrame:
+    """Stored fact -> node roll-up -> validity join -> QAQC: the node
+    actuals both the model build and the comparison start from."""
     fact = spark.read.parquet(fact_path).select(
         F.col("DETECTOR_NAME").alias("sensor"),
         F.col("START_DATETIME").alias("w_start"),
@@ -120,7 +115,21 @@ def run_model_build(spark: SparkSession, fact_path: str, dim: DataFrame,
     )
     roll = two_level_rollup(fact, time_level)
     joined = join_validity(roll, detectors_per_node(dim))
-    passed = qaqc_for_model(joined, **(qaqc_args or DEFAULT_QAQC))
+    return qaqc_for_model(joined, **(qaqc_args or DEFAULT_QAQC))
+
+
+def run_model_build(spark: SparkSession, fact_path: str, dim: DataFrame,
+                    predict_path: str, train_before: str,
+                    spine_start: str, spine_stop: str,
+                    time_level: str = "hour",
+                    qaqc_args: dict | None = None) -> DataFrame:
+    """§3.2: roll-up -> validity join -> QAQC -> per-node GLM -> predictions.
+
+    ``dim`` is the SCD-2 state; predictions land partitioned by node so a
+    re-run of a node batch overwrites only that node (the reference's
+    30-node commit unit, /root/reference/R/_analyze_data.R:179-182).
+    """
+    passed = _qaqc_actuals(spark, fact_path, dim, time_level, qaqc_args)
     train = (passed.filter(F.col("ts") < F.lit(train_before).cast("timestamp"))
              .select("node_name", "ts", "volume_sum"))
     nodes = dim.select(
@@ -142,18 +151,7 @@ def run_comparison(spark: SparkSession, fact_path: str, dim: DataFrame,
                    qaqc_args: dict | None = None) -> DataFrame:
     """§3.3: actual vs predicted with VOLUME_DIFF (in-memory result, as in
     the reference — it feeds a dashboard, not a table)."""
-    fact = spark.read.parquet(fact_path).select(
-        F.col("DETECTOR_NAME").alias("sensor"),
-        F.col("START_DATETIME").alias("w_start"),
-        F.col("VOLUME_SUM_IMPUTE").alias("volume_sum_impute"),
-        F.col("OCCUPANCY_SUM_IMPUTE").alias("occupancy_sum_impute"),
-        F.col("SPEED").alias("speed"),
-        F.col("NODE_NAME").alias("node_name"),
-        F.col("CORRIDOR_ROUTE").alias("corridor_route"),
-    )
-    roll = two_level_rollup(fact, time_level)
-    joined = join_validity(roll, detectors_per_node(dim))
-    actual = qaqc_for_model(joined, **(qaqc_args or DEFAULT_QAQC))
+    actual = _qaqc_actuals(spark, fact_path, dim, time_level, qaqc_args)
     pred = spark.read.parquet(predict_path).select(
         F.col("NODE_NAME").alias("node_name"),
         F.col("PREDICT_TIME").alias("predict_time"),

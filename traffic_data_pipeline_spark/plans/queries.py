@@ -13,14 +13,17 @@ Each query cites the reference operator(s) from SURVEY.md §2 it covers.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from traffic_data_pipeline_spark.functions.tmpdirs import cached_dir_valid, scratch_dir
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from traffic_data_pipeline_spark.operators.aggregate import aggregate_detector
+from traffic_data_pipeline_spark.plans.registry import (  # noqa: F401 — re-exported
+    ORACLES,
+    QUERIES,
+    register,
+)
 from traffic_data_pipeline_spark.sources.sensor import (
     CONFIG_VIEW_SQL,
     SENSOR_VIEW_SQL,
@@ -28,18 +31,6 @@ from traffic_data_pipeline_spark.sources.sensor import (
     sensor_readings,
 )
 from traffic_data_pipeline_spark.sources.tables import load_table
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-    return deco
 
 
 def fmt_ts(col):
@@ -1479,18 +1470,7 @@ from traffic_data_pipeline_spark.plans import mining_ops  # noqa: E402,F401
 from traffic_data_pipeline_spark.plans import analysis_ops  # noqa: E402,F401
 from traffic_data_pipeline_spark.plans import dss_ops  # noqa: E402,F401
 
-# Round-5/round-6 promotions (VERDICT r4 ask #1 / r5 ask #1): the staging
-# areas are part of the live registry unconditionally. Each staged module
-# keeps its own STAGED*_QUERIES/STAGED*_ORACLES dicts (the per-op semantic
-# tests address ops by those names) and folds them into QUERIES/ORACLES at
-# the END of its own body — not here — so the merge is complete in every
-# import order: when a staged module is imported FIRST, its tail fold's own
-# `from plans.queries import QUERIES, ORACLES` fully executes this module
-# (these side-effect imports skip the in-progress staged module via
-# sys.modules, and the fold's attribute access happens only after this
-# module's dicts are bound), then control returns to the staged tail to
-# fold the by-then-complete dicts. A fold HERE would instead run
-# mid-staged-import and capture a partial dict.
+# staged_ops* register through plans/registry.py (see its docstring).
 from traffic_data_pipeline_spark.plans import staged_ops  # noqa: E402,F401
 from traffic_data_pipeline_spark.plans import staged_ops_r6  # noqa: E402,F401
 from traffic_data_pipeline_spark.plans import staged_ops_r7  # noqa: E402,F401

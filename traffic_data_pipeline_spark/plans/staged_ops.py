@@ -1,16 +1,4 @@
-"""Round-5 staging area: operators that are implemented and oracle-gated
-NOW but intentionally NOT registered in the driver registry, honoring the
-round-4 registration freeze (VERDICT r3 ask #3: no net-new ``queries()``
-names until the driver's CORRECTNESS window drains the round-3 backlog).
-
-Everything here uses the exact ``register``-style contract — a Spark
-callable ``(spark, sf_dir) -> DataFrame`` plus a DuckDB oracle string with
-matching column names — so promotion in round 5 is one mechanical step:
-move the ``@staged`` entries into the live registry (or import
-STAGED_QUERIES/STAGED_ORACLES from plans.queries). Until then
-tests/test_staged_ops.py runs the identical query-vs-oracle gate on them
-at sf0.01, and a freeze-guard test pins that none of these names leaks
-into ``__spark_entry__.queries()`` this round.
+"""Round-5 operators, registered with ``@register`` into plans/registry.py.
 
 Operator set (training-data pipeline gaps after round 3's sweep):
 
@@ -95,8 +83,6 @@ Operator set (training-data pipeline gaps after round 3's sweep):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -111,20 +97,8 @@ from traffic_data_pipeline_spark.functions.text import (
     token_array,
     tokens,
 )
+from traffic_data_pipeline_spark.plans.registry import ORACLES, register
 from traffic_data_pipeline_spark.sources.tables import load_table
-
-STAGED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-STAGED_ORACLES: dict[str, str] = {}
-
-
-def staged(name: str, oracle: str | None = None):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_ORACLES[name] = oracle
-        return fn
-    return deco
-
 
 def _literal_docs(spark: SparkSession, rows: list[tuple[int, str]]) -> DataFrame:
     """(doc_id, text) literals as a DETERMINISTIC plan (range + explode of
@@ -182,7 +156,7 @@ pg AS (  -- one row per (doc, 0-based gram start); grams keep duplicates
 """
 
 
-@staged("doc_boilerplate_coverage", f"""
+@register("doc_boilerplate_coverage", f"""
 WITH {_BOILER_CORPUS_CTE},
 freq AS (
   SELECT gram FROM (SELECT DISTINCT doc_id, gram FROM pg)
@@ -269,7 +243,7 @@ def q_doc_boilerplate_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_TOP_K = 20
 
 
-@staged("bpe_merge_step", f"""
+@register("bpe_merge_step", f"""
 WITH toks AS (
   SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
                             x -> x != '')) AS token
@@ -348,7 +322,7 @@ def _morton_sql(bp: str, bs: str, duck: bool) -> str:
     return " + ".join(terms)
 
 
-@staged("lineitem_zorder_layout", f"""
+@register("lineitem_zorder_layout", f"""
 WITH mx AS (
   SELECT MAX(l_partkey) AS mp, MAX(l_suppkey) AS ms FROM lineitem),
 b AS (
@@ -417,7 +391,7 @@ def q_lineitem_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 # embedding_pca_step — one exact power-iteration step of the Gram operator
 # ---------------------------------------------------------------------------
 
-@staged("embedding_pca_step", """
+@register("embedding_pca_step", """
 WITH elems AS (
   SELECT vec_id, t.i AS pos, CAST(embedding[t.i] AS DOUBLE) AS val
   FROM embeddings, unnest(generate_series(1, len(embedding))) t(i)),
@@ -483,7 +457,7 @@ _DECON_OFFSET = 200000
 _IS_BENCH_SQL = "(vec_id % 97 = 0 OR vec_id >= {off})".format(off=_DECON_OFFSET)
 
 
-@staged("embedding_semantic_decontaminate", f"""
+@register("embedding_semantic_decontaminate", f"""
 WITH corpus AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding FROM embeddings
   UNION ALL
@@ -616,7 +590,7 @@ _SNM_PLANTED = 30      # ids < this gain a one-token-appended twin
 _SNM_OFFSET = 400000
 
 
-@staged("dedup_sorted_neighborhood", f"""
+@register("dedup_sorted_neighborhood", f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents
   UNION ALL
@@ -788,7 +762,7 @@ FROM fused ORDER BY rrf DESC, doc_id LIMIT {RRF_TOP_K}
 """
 
 
-@staged("doc_hybrid_search_rrf", _hybrid_oracle())
+@register("doc_hybrid_search_rrf", _hybrid_oracle())
 def q_doc_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval by reciprocal-rank fusion (Cormack et al. 2009):
     rank the corpus with TWO scorers over the same query terms — BM25 and
@@ -920,7 +894,7 @@ FROM bkt
 """
 
 
-@staged("split_cluster_assign", _split_cluster_oracle())
+@register("split_cluster_assign", _split_cluster_oracle())
 def q_split_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe split assignment: hash-assign train/valid/test (8/1/1)
     at the NEAR-DUP CLUSTER level, so a document and its near-duplicates
@@ -967,7 +941,7 @@ def q_split_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DECAY_HALF_LIFE_S = 7 * 24 * 3600     # one week, bucketed
 
 
-@staged("events_decayed_engagement", f"""
+@register("events_decayed_engagement", f"""
 WITH mx AS (SELECT MAX(ts) AS m FROM events),
 k AS (
   -- integer microseconds on both sides: Spark's unix_timestamp truncates
@@ -1028,7 +1002,7 @@ _DSIR_BUCKETS = 4096       # hashed feature space (2^12)
 _DSIR_TARGET_LANG = "en"   # the "target distribution" sample
 
 
-@staged("doc_dsir_importance", f"""
+@register("doc_dsir_importance", f"""
 WITH tl AS (
   -- lang rides the row itself: joining documents back on doc_id would
   -- FAN OUT on duplicate ids (the dirty-corpus case) where Spark's
@@ -1178,7 +1152,7 @@ _FP_LITERAL_SQL = " UNION ALL ".join(
 )
 
 
-@staged("doc_winnowing_fingerprint", f"""
+@register("doc_winnowing_fingerprint", f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents
   UNION ALL
@@ -1315,7 +1289,7 @@ _NOV_PLANTED = 30     # ids < this gain an exact copy (novelty 0 by design)
 _NOV_OFFSET = 600000
 
 
-@staged("doc_ngram_novelty", f"""
+@register("doc_ngram_novelty", f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents
   UNION ALL
@@ -1408,7 +1382,7 @@ def q_doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lang_temperature_weights — multilingual temperature sampling (alpha = 1/2)
 # ---------------------------------------------------------------------------
 
-@staged("lang_temperature_weights", """
+@register("lang_temperature_weights", """
 WITH sized AS (
   SELECT lang,
          CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -1497,7 +1471,7 @@ def q_lang_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVM_SPLIT_DAYS = 3     # "new" = the trailing N days; "old" = everything else
 
 
-@staged("events_rollup_merge", f"""
+@register("events_rollup_merge", f"""
 WITH mx AS (SELECT MAX(ts) AS m FROM events)
 SELECT event_type,
        strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
@@ -1599,7 +1573,7 @@ corpus AS (
 """
 
 
-@staged("doc_paragraph_dedup", f"""
+@register("doc_paragraph_dedup", f"""
 WITH {_PARA_CORPUS_CTE},
 tl AS (
   SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -1766,7 +1740,7 @@ _C4_SQL_KEEP = f"""list_filter(string_split(text, chr(10)), x ->
       AND NOT contains(lower(x), 'javascript'))"""
 
 
-@staged("doc_c4_line_filter", f"""
+@register("doc_c4_line_filter", f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents
   UNION ALL
@@ -1880,7 +1854,7 @@ _GQ_SQL_DOCS = ",\n    ".join(f"({i}, '{t}')" for i, t in _GQ_DOCS)
 _GQ_STOP_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS_EN) + "]"
 
 
-@staged("doc_gopher_quality", f"""
+@register("doc_gopher_quality", f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents
   UNION ALL
@@ -2027,7 +2001,7 @@ _COMPACT_SQL_ROWS = ",\n    ".join(
     f"({i}, '{s}', {n})" for i, s, n in _COMPACT_ROWS)
 
 
-@staged("shard_compaction_plan", f"""
+@register("shard_compaction_plan", f"""
 WITH corpus AS (
   SELECT doc_id, source, n_chars FROM documents
   UNION ALL
@@ -2128,7 +2102,7 @@ _JL_COLS_SQL = ",\n  ".join(
     for j in range(JL_K))
 
 
-@staged("embedding_jl_projection", f"""
+@register("embedding_jl_projection", f"""
 WITH elems AS (
   SELECT vec_id, t.i AS pos, CAST(embedding[t.i] AS DOUBLE) AS val
   FROM embeddings, unnest(generate_series(1, len(embedding))) t(i)),
@@ -2210,7 +2184,7 @@ def _cms_rb(key):
     ])
 
 
-@staged("events_heavy_hitters_cms", f"""
+@register("events_heavy_hitters_cms", f"""
 WITH counts AS (
   SELECT user_id, CAST(COUNT(*) AS BIGINT) AS c,
          md5(CAST(user_id AS VARCHAR)) AS h
@@ -2277,7 +2251,7 @@ def q_events_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged("sensor_theilsen_trend", """
+@register("sensor_theilsen_trend", """
 WITH readings AS (
 SELECT CAST(user_id AS VARCHAR)                                    AS sensor,
        CAST(ts AS DATE)                                            AS reading_date,
@@ -2433,7 +2407,7 @@ ORDER BY a.adc_d2, a.vec_id LIMIT {PQ_TOP}
 """
 
 
-@staged("embedding_pq_adc", _PQ_SQL)
+@register("embedding_pq_adc", _PQ_SQL)
 def q_embedding_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization asymmetric-distance (ADC) top-k scan — the
     memory-bound ANN shape (Jegou et al., PQ for NN search): each vector
@@ -2553,7 +2527,7 @@ WHERE f.rk = 1
 """
 
 
-@staged("embedding_margin_align", _ALIGN_SQL)
+@register("embedding_margin_align", _ALIGN_SQL)
 def q_embedding_margin_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Margin-based mutual-nearest-neighbor alignment (the
     Artetxe-Schwenk bitext-mining criterion behind CCMatrix/LASER
@@ -2764,7 +2738,7 @@ def _align_band_codes_df(side, id_alias, planes, rb):
             .otherwise(F.lit(0).cast("bigint"))).alias("code")))
 
 
-@staged("embedding_margin_align_ann", _ALIGN_ANN_SQL)
+@register("embedding_margin_align_ann", _ALIGN_ANN_SQL)
 def q_embedding_margin_align_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ANN-candidate form of ``embedding_margin_align`` (VERDICT r5
     ask #2): identical margin/mutuality semantics, but the |A| x |B|
@@ -2884,7 +2858,7 @@ def q_embedding_margin_align_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # events_key_skew_report — pre-flight join/agg skew diagnostics
 # ---------------------------------------------------------------------------
 
-@staged("events_key_skew_report", """
+@register("events_key_skew_report", """
 WITH kc AS (
   SELECT event_type, user_id, CAST(COUNT(*) AS BIGINT) AS c
   FROM events GROUP BY 1, 2),
@@ -2983,7 +2957,7 @@ CMS_WIN_S = 21600    # 6-hour tumbling windows (epoch-aligned, both engines)
 CMS_STREAM_TOP = 5
 
 
-@staged("streaming_cms_topk", f"""
+@register("streaming_cms_topk", f"""
 WITH ev AS (
   SELECT TIMESTAMP '1970-01-01 00:00:00'
            + to_seconds(FLOOR(epoch(ts) / {CMS_WIN_S}) * {CMS_WIN_S}) AS w,
@@ -3117,7 +3091,7 @@ SNAP_ADD_MOD = 7
 SNAP_EDIT_MOD = 11
 
 
-@staged("corpus_snapshot_diff", f"""
+@register("corpus_snapshot_diff", f"""
 WITH old AS (
   SELECT doc_id, source, md5(text) AS content_key
   FROM documents WHERE doc_id % {SNAP_ADD_MOD} != 0),
@@ -3198,7 +3172,7 @@ def q_corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 LATE_DELAYS_S = (600, 3600)      # candidate watermark delays: 10 min, 1 h
 
 
-@staged("events_late_arrival_audit", f"""
+@register("events_late_arrival_audit", f"""
 WITH feed AS (
   SELECT ts, event_id,
          event_id + CASE WHEN event_id % 13 = 0 THEN 50
@@ -3313,7 +3287,7 @@ def q_events_late_arrival_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ALLOC_BUDGET = 100_000    # training-slot budget to split across languages
 
 
-@staged("mixture_budget_allocate", f"""
+@register("mixture_budget_allocate", f"""
 WITH per_lang AS (
   SELECT lang,
          CAST(SUM(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -3422,7 +3396,7 @@ def q_mixture_budget_allocate(spark: SparkSession, sf_dir: str) -> DataFrame:
 K_ANON = 5          # groups smaller than this are re-identification risks
 
 
-@staged("doc_kanonymity_report", f"""
+@register("doc_kanonymity_report", f"""
 WITH g AS (
   SELECT lang, source,
          CAST(floor(n_chars / 100.0) AS BIGINT) AS size_bucket,
@@ -3518,7 +3492,7 @@ FROM lab JOIN cuts ON cuts.lang = lab.lang
 """
 
 
-@staged("doc_perplexity_buckets", _perp_oracle())
+@register("doc_perplexity_buckets", _perp_oracle())
 def q_doc_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet's head/middle/tail split (Wenzek et al. 2020): bucket every
     document into per-LANGUAGE perplexity terciles of the bigram LM
@@ -3637,7 +3611,7 @@ GROUP BY 1
 """
 
 
-@staged("dedup_graph_kcore", _kcore_oracle())
+@register("dedup_graph_kcore", _kcore_oracle())
 def q_dedup_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{KCORE_K}-core of the near-dup pair graph: repeatedly peel nodes
     whose within-subgraph degree falls below {KCORE_K} until a fixpoint —
@@ -3699,31 +3673,3 @@ def q_dedup_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return degrees(pairs).select(
         F.col("v").alias("doc_id"),
         F.col("deg").cast("bigint").alias("core_degree"))
-
-
-# ---------------------------------------------------------------------------
-# Round-5 promotion fold (VERDICT r4 ask #1). This runs at the END of the
-# module body so every @staged registration above is complete before the
-# live registry absorbs it, in EVERY import order: when queries.py is
-# imported first its bottom `import staged_ops` executes this whole module
-# (including this fold) before queries.py finishes; when this module is
-# imported first, the fold's own `from plans.queries import ...` below
-# fully executes queries.py — whose tail imports of the staged modules are
-# side-effect imports with no attribute access, so the in-progress import
-# of THIS module is skipped via sys.modules — and control returns here to
-# fold the by-then-complete dicts (ADVICE r5: this import, not the
-# now-removed mid-file extensions import, is what completes queries.py on
-# this path). Both paths end with the same registry; the update is
-# idempotent if both run.
-# ---------------------------------------------------------------------------
-from traffic_data_pipeline_spark.plans.queries import (  # noqa: E402
-    ORACLES as _LIVE_ORACLES,
-    QUERIES as _LIVE_QUERIES,
-)
-
-_collide = {n for n in set(_LIVE_QUERIES) & set(STAGED_QUERIES)
-            if _LIVE_QUERIES[n] is not STAGED_QUERIES[n]}
-if _collide:  # not assert: must survive python -O (ADVICE r5)
-    raise RuntimeError(f"staged names collide with registry: {_collide}")
-_LIVE_QUERIES.update(STAGED_QUERIES)
-_LIVE_ORACLES.update(STAGED_ORACLES)

@@ -1,18 +1,4 @@
-"""Round-10 staging area, PROMOTED in round 10 (VERDICT r9 ask #1):
-these five operators were built and oracle-gated in round 9 behind the
-registration freeze (the round-9 promotion backlog drained through the
-driver's CORRECTNESS window first) and are now folded unconditionally
-into the live registry by the tail fold below — the same mechanical
-promotion path as plans/staged_ops.py, plans/staged_ops_r6.py,
-plans/staged_ops_r7.py, plans/staged_ops_r8.py, and
-plans/staged_ops_r9.py: each op is a Spark callable
-``(spark, sf_dir) -> DataFrame`` plus a DuckDB oracle string with
-matching column names; exchange caps moved into
-tests/test_plan_shapes.py; the round-9 freeze guard in
-tests/test_staged_ops_r10.py flipped into a promotion check; and the
-BENCH_STAGED_r09-costly names (streaming_rfm_monitor 20.3 s,
-streaming_deltapresence_monitor 15.4 s) queued into
-``__spark_entry__._COSTLY_TAIL``.
+"""Round-10 operators, registered with ``@register`` into plans/registry.py.
 
 Operator set (VERDICT r8 "What's missing" #2 — the named round-10
 staging gaps, plus the conditional the judge stated):
@@ -51,26 +37,12 @@ staging gaps, plus the conditional the judge stated):
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from traffic_data_pipeline_spark.functions.tmpdirs import cached_dir_valid
+from traffic_data_pipeline_spark.plans.registry import ORACLES, register
 from traffic_data_pipeline_spark.sources.tables import load_table
-
-STAGED_R10_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-STAGED_R10_ORACLES: dict[str, str] = {}
-
-
-def staged_r10(name: str, oracle: str | None = None):
-    def deco(fn):
-        STAGED_R10_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_R10_ORACLES[name] = oracle
-        return fn
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # events_user_deltapresence — membership-disclosure risk per QI cell
@@ -85,7 +57,7 @@ def staged_r10(name: str, oracle: str | None = None):
 DELTA_HIGH_BAND = 5
 
 
-@staged_r10("events_user_deltapresence", f"""
+@register("events_user_deltapresence", f"""
 WITH cells AS (
   SELECT event_type, date_trunc('hour', ts) AS hr,
          CAST(COUNT(DISTINCT user_id) AS BIGINT) AS pu,
@@ -247,7 +219,7 @@ def _delta_handle(spark: SparkSession, state_dir: str, out_dir: str):
     return handle
 
 
-@staged_r10("streaming_deltapresence_monitor")
+@register("streaming_deltapresence_monitor")
 def q_streaming_deltapresence_monitor(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
     """events_user_deltapresence turned into the always-on monitoring
@@ -323,7 +295,7 @@ QI_LADDER = [("hour", 3600), ("4hour", 14400), ("day", 86400)]
 QI_K = 5
 
 
-@staged_r10("events_qi_generalization_ladder", f"""
+@register("events_qi_generalization_ladder", f"""
 WITH expanded AS (
   SELECT g.gran, e.event_type, e.user_id,
          CAST(FLOOR(epoch(e.ts) / g.secs) AS BIGINT) AS cell_ts
@@ -437,7 +409,7 @@ FROM tl GROUP BY 1, 2
 """
 
 
-@staged_r10("dedup_impact_by_lang_source")
+@register("dedup_impact_by_lang_source")
 def q_dedup_impact_by_lang_source(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """Dedup bias audit at the JOINT (lang × source) cell — the readout
@@ -570,7 +542,7 @@ def _rfm_stream_dir(spark: SparkSession, sf_dir: str) -> str:
         ["o_custkey", "o_orderdate", "o_totalprice"])
 
 
-@staged_r10("streaming_rfm_monitor")
+@register("streaming_rfm_monitor")
 def q_streaming_rfm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders_rfm_segmentation turned into the always-on monitoring form
     — the customer-grain republisher VERDICT r8 conditioned on "a
@@ -620,42 +592,14 @@ def _late_bind_oracles() -> None:
     """Oracle strings that reuse other modules' oracles verbatim are
     bound lazily (the staged_ops_r8/r9 pattern) to avoid import-order
     traps."""
-    from traffic_data_pipeline_spark.plans.staged_ops_r8 import (
-        STAGED_R8_ORACLES,
-    )
+    from traffic_data_pipeline_spark.plans import staged_ops_r8  # noqa: F401
 
-    STAGED_R10_ORACLES["streaming_rfm_monitor"] = (
-        STAGED_R8_ORACLES["orders_rfm_segmentation"])
-    STAGED_R10_ORACLES["dedup_impact_by_lang_source"] = (
+    ORACLES["streaming_rfm_monitor"] = (
+        ORACLES["orders_rfm_segmentation"])
+    ORACLES["dedup_impact_by_lang_source"] = (
         _dedup_impact_joint_oracle())
-    STAGED_R10_ORACLES["streaming_deltapresence_monitor"] = (
-        STAGED_R10_ORACLES["events_user_deltapresence"])
+    ORACLES["streaming_deltapresence_monitor"] = (
+        ORACLES["events_user_deltapresence"])
 
 
 _late_bind_oracles()
-
-
-# ---------------------------------------------------------------------------
-# Round-10 promotion fold (VERDICT r9 ask #1). Runs at the END of the module
-# body so every @staged_r10 registration above is complete before the live
-# registry absorbs it, in EVERY import order (the staged_ops/staged_ops_r6/
-# staged_ops_r7/staged_ops_r8/staged_ops_r9 fold contract: when queries.py
-# is imported first, its bottom import of this module executes this whole
-# fold before queries.py finishes; when this module is imported first, the
-# fold's own `from plans.queries import ...` below fully executes
-# queries.py — whose tail imports are side-effect imports that skip the
-# in-progress import of THIS module via sys.modules — and control returns
-# here to fold the by-then-complete dicts. Both paths end with the same
-# registry; the update is idempotent if both run.)
-# ---------------------------------------------------------------------------
-from traffic_data_pipeline_spark.plans.queries import (  # noqa: E402
-    ORACLES as _LIVE_ORACLES,
-    QUERIES as _LIVE_QUERIES,
-)
-
-_collide = {n for n in set(_LIVE_QUERIES) & set(STAGED_R10_QUERIES)
-            if _LIVE_QUERIES[n] is not STAGED_R10_QUERIES[n]}
-if _collide:  # not assert: must survive python -O
-    raise RuntimeError(f"staged r10 names collide with registry: {_collide}")
-_LIVE_QUERIES.update(STAGED_R10_QUERIES)
-_LIVE_ORACLES.update(STAGED_R10_ORACLES)

@@ -3,14 +3,17 @@ intentionally NOT registered, honoring the registration freeze until the
 round-10 promotion (5 staged r10 ops) drains through the driver's
 CORRECTNESS window.
 
-Same contract as the six promoted staging areas (plans/staged_ops.py,
-staged_ops_r6/r7/r8/r9/r10): each op is a Spark callable
+This is the only staging area left; every other op registers with
+``@register`` (plans/registry.py). Each op here is a Spark callable
 ``(spark, sf_dir) -> DataFrame`` plus a DuckDB oracle string with
-matching column names, so the round-11 promotion is the same mechanical
-fold — add the tail fold here, import this module at the end of
-plans/queries.py, move STAGED_R11_CAPS into tests/test_plan_shapes.py,
-flip the freeze test into a promotion check, and queue the
-BENCH_STAGED-costly names into ``__spark_entry__._COSTLY_TAIL``.
+matching column names, so promoting it means replacing ``@staged_r11``
+with ``@register`` (and ``STAGED_R11_ORACLES[...]`` writes with
+``ORACLES[...]``), deleting the two dicts and the decorator, importing
+this module at the end of plans/queries.py, moving STAGED_R11_CAPS into
+tests/test_plan_shapes.py, flipping the freeze test
+(tests/test_staged_ops_r11.py::test_staged_r11_names_not_registered)
+into a promotion check, and queueing the BENCH_STAGED-costly names into
+``__spark_entry__._COSTLY_TAIL``.
 
 Operator set (VERDICT r9 ask #6 — the round-11 direction decision:
 "open a genuinely new family"): the reference's LAST unexposed surface,

@@ -1,18 +1,4 @@
-"""Round-6 staging area: operators implemented and oracle-gated NOW but
-intentionally NOT registered, honoring the round-5 registration freeze
-(VERDICT r4 ask #2: no net-new ``queries()`` names until the driver's
-CORRECTNESS window drains the 47-row promotion backlog).
-
-Same contract as the round-4 staging area that round 5 promoted
-(plans/staged_ops.py): each op is a Spark callable
-``(spark, sf_dir) -> DataFrame`` plus a DuckDB oracle string with
-matching column names, so the round-6 promotion is the same mechanical
-fold — move the import into plans/queries.py's tail and append these
-dicts at the end of THIS module's body (complete in every import order;
-see staged_ops.py's fold comment). tests/test_staged_ops_r6.py runs the
-identical query-vs-oracle gate at sf0.01, pins exchange caps, and a
-freeze-guard test pins that none of these names leaks into
-``__spark_entry__.queries()`` this round.
+"""Round-6 operators, registered with ``@register`` into plans/registry.py.
 
 Operator set (training-data-pipeline + product-analytics gaps after the
 round-5 sweep):
@@ -52,28 +38,14 @@ round-5 sweep):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from traffic_data_pipeline_spark.functions.tmpdirs import cached_dir_valid
 from traffic_data_pipeline_spark.functions.similarity import DOT_DECIMAL
+from traffic_data_pipeline_spark.plans.registry import register
 from traffic_data_pipeline_spark.sources.tables import load_table
-
-STAGED_R6_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-STAGED_R6_ORACLES: dict[str, str] = {}
-
-
-def staged_r6(name: str, oracle: str | None = None):
-    def deco(fn):
-        STAGED_R6_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_R6_ORACLES[name] = oracle
-        return fn
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # events_attribution — last-touch + linear multi-touch purchase attribution
@@ -82,7 +54,7 @@ def staged_r6(name: str, oracle: str | None = None):
 ATTR_LOOKBACK_S = 7 * 86400     # 7-day click lookback window
 
 
-@staged_r6("events_attribution", f"""
+@register("events_attribution", f"""
 WITH purch AS (
   SELECT event_id AS purchase_id, user_id, ts AS p_ts, value
   FROM events WHERE event_type = 'purchase'),
@@ -157,7 +129,7 @@ def q_events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r6("events_markov_transitions", """
+@register("events_markov_transitions", """
 WITH seq AS (
   SELECT user_id, event_type AS src,
          LEAD(event_type) OVER (PARTITION BY user_id
@@ -236,7 +208,7 @@ def q_events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r6("events_ab_proportions", """
+@register("events_ab_proportions", """
 WITH cohorts AS (
   SELECT user_id, user_id % 2 AS cohort,
          MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS converted
@@ -316,7 +288,7 @@ def _pois_case_sql(u: str) -> str:
     return f"CASE {cases} ELSE 5 END"
 
 
-@staged_r6("events_median_bootstrap_ci", f"""
+@register("events_median_bootstrap_ci", f"""
 WITH rep AS (
   SELECT event_type, value, r.r,
          CAST('0x' || substr(md5(CAST(event_id AS VARCHAR) || ':'
@@ -429,7 +401,7 @@ def q_events_median_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r6("events_spend_concentration", """
+@register("events_spend_concentration", """
 WITH spend AS (
   SELECT event_type, user_id,
          CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DECIMAL(18,6)) AS s
@@ -535,7 +507,7 @@ CROSS JOIN nn
 """
 
 
-@staged_r6("embedding_whitening_stats", _whitening_oracle())
+@register("embedding_whitening_stats", _whitening_oracle())
 def q_embedding_whitening_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitening statistics for the embedding corpus: the per-dimension
     mean and the full upper-triangle covariance matrix (population form,
@@ -662,7 +634,7 @@ GROUP BY 1
 """
 
 
-@staged_r6("embedding_dim_truncation_recall", _trunc_recall_oracle())
+@register("embedding_dim_truncation_recall", _trunc_recall_oracle())
 def q_embedding_dim_truncation_recall(
         spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-style dimension-truncation readout (Kusupati et al.
@@ -750,7 +722,7 @@ GROUP BY 1
 """
 
 
-@staged_r6("doc_lm_kneser_ney", _kn_oracle())
+@register("doc_lm_kneser_ney", _kn_oracle())
 def q_doc_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated Kneser-Ney bigram LM score per document (Kneser &
     Ney 1995; Chen & Goodman 1999's interpolated form): absolute
@@ -861,7 +833,7 @@ FROM upd u CROSS JOIN norm n
 """
 
 
-@staged_r6("corpus_doremi_step", _doremi_oracle())
+@register("corpus_doremi_step", _doremi_oracle())
 def q_corpus_doremi_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One DoReMi-style domain-reweighting step (Xie et al. 2023,
     "DoReMi: Optimizing Data Mixtures Speeds Up Language Model
@@ -928,7 +900,7 @@ def q_corpus_doremi_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 ZONEMAP_PROBE_DAYS = (10, 16)    # inclusive day-of-month probe window
 
 
-@staged_r6("events_time_zonemap_audit", f"""
+@register("events_time_zonemap_audit", f"""
 WITH files AS (
   SELECT CAST(ts AS DATE) AS file_day,
          CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -1031,7 +1003,7 @@ FROM s GROUP BY 1
 """
 
 
-@staged_r6("embedding_silhouette_by_label", _silhouette_oracle())
+@register("embedding_silhouette_by_label", _silhouette_oracle())
 def q_embedding_silhouette_by_label(
         spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simplified (centroid-based) silhouette per label — the cluster
@@ -1138,7 +1110,7 @@ WHERE rk <= {OOD_TOP}
 """
 
 
-@staged_r6("embedding_ood_score", _ood_oracle())
+@register("embedding_ood_score", _ood_oracle())
 def q_embedding_ood_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Out-of-distribution readout over the embedding corpus: squared
     Mahalanobis distance to the corpus mean under a DIAGONAL covariance
@@ -1203,7 +1175,7 @@ def q_embedding_ood_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r6("events_conversion_latency", """
+@register("events_conversion_latency", """
 WITH purch AS (
   SELECT user_id, event_id, ts AS p_ts
   FROM events WHERE event_type = 'purchase'),
@@ -1269,7 +1241,7 @@ CHURN_CENSOR_DAYS = 7    # users active this close to the horizon are
                          # censored (can't be called churned yet)
 
 
-@staged_r6("user_churn_hazard", f"""
+@register("user_churn_hazard", f"""
 WITH life AS (
   SELECT user_id,
          date_diff('day', MIN(CAST(ts AS DATE)), MAX(CAST(ts AS DATE)))
@@ -1372,7 +1344,7 @@ def _funnel_events_dir(spark: SparkSession, sf_dir: str) -> str:
     return _FUNNEL_SRC_CACHE[sf_dir]
 
 
-@staged_r6("streaming_session_funnel", """
+@register("streaming_session_funnel", """
 WITH ordered AS (
   SELECT user_id, ts, event_type,
          CASE WHEN LAG(ts) OVER w IS NULL
@@ -1491,7 +1463,7 @@ GROUP BY v.v_total, v.c_max
 """
 
 
-@staged_r6("vocab_zipf_alpha", _zipf_oracle())
+@register("vocab_zipf_alpha", _zipf_oracle())
 def q_vocab_zipf_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf/power-law tail exponent of the token-frequency distribution
     via the discrete MLE (Clauset, Shalizi & Newman 2009, eq. 3.7:
@@ -1587,7 +1559,7 @@ FROM lp CROSS JOIN ols o
 """
 
 
-@staged_r6("corpus_heaps_law", _heaps_oracle())
+@register("corpus_heaps_law", _heaps_oracle())
 def q_corpus_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps'-law vocabulary-growth fit — the companion readout to
     vocab_zipf_alpha: V(n) ~ K n^beta, beta estimated by OLS on the
@@ -1706,7 +1678,7 @@ FROM cnt c JOIN tot t USING (true_lang)
 """
 
 
-@staged_r6("lang_id_confusion", _langconf_oracle())
+@register("lang_id_confusion", _langconf_oracle())
 def q_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classifier-evaluation readout for the registered lang-id
     heuristic: the confusion matrix of predicted vs labeled language
@@ -1747,7 +1719,7 @@ def q_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 AGING_EDGES = (30, 90, 180)     # bucket edges in days, inclusive upper
 
 
-@staged_r6("orders_backlog_aging", f"""
+@register("orders_backlog_aging", f"""
 WITH horizon AS (SELECT MAX(o_orderdate) AS h FROM orders),
 open_orders AS (
   SELECT o.o_orderkey, o.o_totalprice,
@@ -1813,7 +1785,7 @@ BURST_WINDOW_S = 60
 BURST_FLAG_MIN = 8    # max 60-s burst at/above this flags the user
 
 
-@staged_r6("events_burst_flags", f"""
+@register("events_burst_flags", f"""
 WITH es AS (
   SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS es
   FROM events WHERE ts IS NOT NULL),
@@ -1884,7 +1856,7 @@ def q_events_burst_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 DID_SPLIT_DAY = 16    # period boundary: day-of-month >= this is "post"
 
 
-@staged_r6("events_did_estimate", f"""
+@register("events_did_estimate", f"""
 WITH purch AS (
   SELECT user_id % 2 AS cohort,
          CASE WHEN day(CAST(ts AS DATE)) >= {DID_SPLIT_DAY}
@@ -1994,7 +1966,7 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM uni) AS vocab,
 """
 
 
-@staged_r6("corpus_entropy_rate", _entropy_oracle())
+@register("corpus_entropy_rate", _entropy_oracle())
 def q_corpus_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus entropy readout — the third corpus law next to Zipf and
     Heaps: unigram entropy H(W) = -sum p(w) ln p(w) and the bigram
@@ -2062,29 +2034,3 @@ def q_corpus_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(
             h_cond.select(F.round("h", 6).alias("h_bigram_cond_nats"))))
     )
-
-
-# ---------------------------------------------------------------------------
-# Round-6 promotion fold (VERDICT r5 ask #1). Runs at the END of the module
-# body so every @staged_r6 registration above is complete before the live
-# registry absorbs it, in EVERY import order: when queries.py is imported
-# first, its bottom `import staged_ops_r6` executes this whole module
-# (including this fold) before queries.py finishes; when this module is
-# imported first, the fold's own `from plans.queries import ...` below fully
-# executes queries.py — whose tail imports of staged_ops/staged_ops_r6 are
-# side-effect imports with no attribute access, so the in-progress import of
-# THIS module is skipped via sys.modules — and control returns here to fold
-# the by-then-complete dicts. Both paths end with the same registry; the
-# update is idempotent if both run.
-# ---------------------------------------------------------------------------
-from traffic_data_pipeline_spark.plans.queries import (  # noqa: E402
-    ORACLES as _LIVE_ORACLES,
-    QUERIES as _LIVE_QUERIES,
-)
-
-_collide = {n for n in set(_LIVE_QUERIES) & set(STAGED_R6_QUERIES)
-            if _LIVE_QUERIES[n] is not STAGED_R6_QUERIES[n]}
-if _collide:  # not assert: must survive python -O (ADVICE r5)
-    raise RuntimeError(f"staged r6 names collide with registry: {_collide}")
-_LIVE_QUERIES.update(STAGED_R6_QUERIES)
-_LIVE_ORACLES.update(STAGED_R6_ORACLES)

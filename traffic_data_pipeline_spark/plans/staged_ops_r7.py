@@ -1,17 +1,4 @@
-"""Round-7 staging area, PROMOTED into the live registry in round 7
-(VERDICT r6 ask #1) after staging oracle-gated behind the round-6
-registration freeze: the tail fold below merges these 31 operators into
-plans/queries.py's QUERIES/ORACLES, their exchange caps moved to
-tests/test_plan_shapes.py, the BENCH_STAGED-costly names queued into
-``__spark_entry__._COSTLY_TAIL``, and the former freeze guard flipped
-into a promotion check.
-
-Same contract as the two previously promoted staging areas
-(plans/staged_ops.py, plans/staged_ops_r6.py): each op is a Spark
-callable ``(spark, sf_dir) -> DataFrame`` plus a DuckDB oracle string
-with matching column names. tests/test_staged_ops_r7.py runs the
-identical query-vs-oracle gate at sf0.01 addressing each op by its
-staged name.
+"""Round-7 operators, registered with ``@register`` into plans/registry.py.
 
 Operator set (VERDICT r5 ask #6's named gaps + training-data/analytics
 gaps after the round-6 sweep):
@@ -91,8 +78,6 @@ the ANN-fed MMR twin whose pool rides the hyperplane-LSH index
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -104,20 +89,8 @@ from traffic_data_pipeline_spark.plans.oracle_ctes import (
     _MINHASH_CTES,
     _TOK_LIST_CTE,
 )
+from traffic_data_pipeline_spark.plans.registry import ORACLES, register
 from traffic_data_pipeline_spark.sources.tables import load_table
-
-STAGED_R7_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-STAGED_R7_ORACLES: dict[str, str] = {}
-
-
-def staged_r7(name: str, oracle: str | None = None):
-    def deco(fn):
-        STAGED_R7_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_R7_ORACLES[name] = oracle
-        return fn
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # lang_fertility_drift — tokenizer fertility drift across corpus snapshots
@@ -126,7 +99,7 @@ def staged_r7(name: str, oracle: str | None = None):
 _BPE_RE_SQL = "'''(?:s|t|re|ve|m|ll|d)| ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9 ]+'"
 
 
-@staged_r7("lang_fertility_drift", f"""
+@register("lang_fertility_drift", f"""
 WITH vers AS (
   SELECT doc_id, lang, text, 'old' AS snap
   FROM documents WHERE doc_id % 7 != 0
@@ -234,7 +207,7 @@ def q_lang_fertility_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 SPAN_L = 8        # gram width in tokens (the _GRAMS8_CTE convention)
 
 
-@staged_r7("dedup_exact_substring_spans", f"""
+@register("dedup_exact_substring_spans", f"""
 WITH {_TOK_LIST_CTE},
 grams AS (
   SELECT doc_id, g AS i, md5(array_to_string(l[g:g+{SPAN_L - 1}], ' ')) AS gk
@@ -319,7 +292,7 @@ def q_dedup_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame
 SAMPLE_BUDGET = 100
 
 
-@staged_r7("corpus_stratified_sample", f"""
+@register("corpus_stratified_sample", f"""
 WITH strata AS (
   SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n
   FROM documents GROUP BY 1, 2),
@@ -405,7 +378,7 @@ def q_corpus_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup_cross_source_matrix — who copies from whom
 # ---------------------------------------------------------------------------
 
-@staged_r7("dedup_cross_source_matrix", f"""
+@register("dedup_cross_source_matrix", f"""
 WITH {_MINHASH_CTES},
 {_MH_PAIRS_CTE},
 sp AS (
@@ -469,7 +442,7 @@ def q_dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_K = 8          # the registered knn_ivf centroid count
 
 
-@staged_r7("embedding_ivf_balance_report", f"""
+@register("embedding_ivf_balance_report", f"""
 WITH elems AS (
   SELECT vec_id, t.i AS pos, CAST(embedding[t.i] AS DOUBLE) AS val
   FROM embeddings, unnest(generate_series(1, len(embedding))) t(i)),
@@ -573,7 +546,7 @@ def q_embedding_ivf_balance_report(spark: SparkSession, sf_dir: str) -> DataFram
 # events_value_benford — first-significant-digit audit of event values
 # ---------------------------------------------------------------------------
 
-@staged_r7("events_value_benford", """
+@register("events_value_benford", """
 WITH cents AS (
   SELECT event_type,
          CAST(ROUND(ABS(value) * 100) AS BIGINT) AS m
@@ -656,7 +629,7 @@ def q_events_value_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
 RETENTION_OFFSETS = (0, 1, 7, 14)
 
 
-@staged_r7("events_retention_cohorts", f"""
+@register("events_retention_cohorts", f"""
 WITH ud AS (
   SELECT DISTINCT user_id, CAST(ts AS DATE) AS d
   FROM events WHERE ts IS NOT NULL),
@@ -731,7 +704,7 @@ def q_events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # doc_repetition_profile — the Gopher rep-* family doc_gopher_quality skips
 # ---------------------------------------------------------------------------
 
-@staged_r7("doc_repetition_profile", f"""
+@register("doc_repetition_profile", f"""
 WITH {_TOK_LIST_CTE},
 base AS (
   SELECT doc_id, l, len(l) AS n FROM tl),
@@ -852,7 +825,7 @@ def q_doc_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus_lang_source_coverage — joint composition vs independence
 # ---------------------------------------------------------------------------
 
-@staged_r7("corpus_lang_source_coverage", """
+@register("corpus_lang_source_coverage", """
 WITH cnt AS (
   SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n
   FROM documents GROUP BY 1, 2),
@@ -914,7 +887,7 @@ def q_corpus_lang_source_coverage(spark: SparkSession, sf_dir: str) -> DataFrame
 SWEEP_AGREES = (4, 5, 6, 7, 8)      # agree-of-8 thresholds >= the family 0.5
 
 
-@staged_r7("dedup_threshold_sweep", f"""
+@register("dedup_threshold_sweep", f"""
 WITH {_MINHASH_CTES},
 {_MH_PAIRS_CTE},
 thr AS (SELECT unnest([{", ".join(map(str, SWEEP_AGREES))}]) AS agree_min),
@@ -1086,7 +1059,7 @@ WHERE f.removed != '(none)' AND f.state = 'START'
 """
 
 
-@staged_r7("events_markov_removal_effect", _markov_oracle())
+@register("events_markov_removal_effect", _markov_oracle())
 def q_events_markov_removal_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markov-chain attribution (removal effects): model user journeys
     as a first-order chain over event types — START -> events (truncated
@@ -1232,7 +1205,7 @@ def _minhash_stream_dir(spark: SparkSession, sf_dir: str) -> str:
         ["doc_id", "text"])
 
 
-@staged_r7("streaming_minhash_index", f"""
+@register("streaming_minhash_index", f"""
 WITH {_MINHASH_CTES},
 {_MH_PAIRS_CTE}
 SELECT doc_a, doc_b, agree / 8.0 AS est_sim
@@ -1371,7 +1344,7 @@ def _minhash_handle(spark: SparkSession, index_dir: str, pair_dir: str):
 # corpus_length_filter_curve — tokens retained per length-decile threshold
 # ---------------------------------------------------------------------------
 
-@staged_r7("corpus_length_filter_curve", """
+@register("corpus_length_filter_curve", """
 WITH qs AS (
   SELECT ROUND(quantile_cont(n_chars, 0.0), 6) AS t0,
          ROUND(quantile_cont(n_chars, 0.1), 6) AS t1,
@@ -1461,7 +1434,7 @@ def q_corpus_length_filter_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # embedding_centroid_drift — per-label centroid shift across snapshots
 # ---------------------------------------------------------------------------
 
-@staged_r7("embedding_centroid_drift", """
+@register("embedding_centroid_drift", """
 WITH vers AS (
   SELECT vec_id, label, embedding, 'old' AS snap
   FROM embeddings WHERE vec_id % 7 != 0
@@ -1568,7 +1541,7 @@ def q_embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 PURITY_CHUNK = 32       # tokens per language-vote chunk
 
 
-@staged_r7("doc_language_purity", f"""
+@register("doc_language_purity", f"""
 WITH {_TOK_LIST_CTE},
 chunks AS (
   SELECT doc_id, CAST((s.i - 1) // {PURITY_CHUNK} AS BIGINT) AS chunk_id,
@@ -1675,7 +1648,7 @@ def q_doc_language_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # events_interarrival_burstiness — arrival-process regularity per type
 # ---------------------------------------------------------------------------
 
-@staged_r7("events_interarrival_burstiness", """
+@register("events_interarrival_burstiness", """
 WITH ordered AS (
   SELECT event_type, epoch_us(ts) AS us,
          LAG(epoch_us(ts)) OVER (PARTITION BY event_type
@@ -1758,7 +1731,7 @@ _SENT_RE = "[.!?]+"
 _SYL_RE = "[aeiouy]+"
 
 
-@staged_r7("doc_readability", f"""
+@register("doc_readability", f"""
 WITH per AS (
   SELECT lang, source,
          len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -1881,7 +1854,7 @@ _NB_DEC = "decimal(20,9)"
 _NB_INT = "decimal(20,0)"
 
 
-@staged_r7("doc_nb_langid", f"""
+@register("doc_nb_langid", f"""
 WITH low AS (SELECT doc_id, lang, lower(text) AS t FROM documents),
 tr AS (SELECT * FROM low WHERE doc_id % {NB_TEST_MOD} != 0),
 te AS (SELECT * FROM low WHERE doc_id % {NB_TEST_MOD} = 0),
@@ -2083,7 +2056,7 @@ IVFPQ_NPROBE = 2     # probed lists per query
 from traffic_data_pipeline_spark.plans.oracle_ctes import _EMB_CTES  # noqa: E402
 
 
-@staged_r7("embedding_ivfpq_query", f"""
+@register("embedding_ivfpq_query", f"""
 WITH {_EMB_CTES},
 ccent AS (SELECT vec_id AS cc, pos, val FROM elems WHERE vec_id < {IVFPQ_KC}),
 cd2 AS (
@@ -2208,7 +2181,7 @@ def q_embedding_ivfpq_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 PSI_ANCHORS = 40  # top-K old-snapshot tokens anchoring the PSI buckets
 
 
-@staged_r7("corpus_token_psi_drift", f"""
+@register("corpus_token_psi_drift", f"""
 WITH vers AS (
   SELECT doc_id, lang, text, 'old' AS snap
   FROM documents WHERE doc_id % 7 != 0
@@ -2376,7 +2349,7 @@ EWMA_FAST = 0.5   # both alphas are binary rationals, so every weight
 EWMA_SLOW = 0.25  # alpha*(1-alpha)^i is an EXACT double (see docstring)
 
 
-@staged_r7("events_ewma_forecast", """
+@register("events_ewma_forecast", """
 WITH daily AS (
   SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
          CAST(COUNT(*) AS BIGINT) AS y
@@ -2504,7 +2477,7 @@ def _ewma_from_daily(daily: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r7("part_price_elasticity", """
+@register("part_price_elasticity", """
 WITH pts AS (
   SELECT p.p_type,
          ROUND(ln(l.l_extendedprice / l.l_quantity), 12) AS x,
@@ -2599,7 +2572,7 @@ def q_part_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r7("supplier_share_hhi", """
+@register("supplier_share_hhi", """
 WITH rev AS (
   SELECT p.p_type, l.l_suppkey,
          CAST(SUM(CAST(ROUND(l.l_extendedprice * 100) AS BIGINT))
@@ -2686,7 +2659,7 @@ def q_supplier_share_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
 LEAD_LAG_MAX = 3  # correlate a_t against b_(t+lag) for lag 0..3
 
 
-@staged_r7("events_lead_lag_correlation", f"""
+@register("events_lead_lag_correlation", f"""
 WITH daily AS (
   SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
          CAST(COUNT(*) AS BIGINT) AS y
@@ -2889,7 +2862,7 @@ FROM sel{MMR_K}"""
     return head + "".join(steps) + tail
 
 
-@staged_r7("embedding_mmr_topk", _mmr_oracle())
+@register("embedding_mmr_topk", _mmr_oracle())
 def q_embedding_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance retrieval (Carbonell & Goldstein 1998):
     greedily pick K results that balance relevance to the query against
@@ -2993,7 +2966,7 @@ def _mmr_greedy(pool: DataFrame) -> DataFrame:
                       F.col("score").cast("double").alias("mmr_score"))
 
 
-@staged_r7("embedding_mmr_topk_ann", _mmr_oracle(ann=True))
+@register("embedding_mmr_topk_ann", _mmr_oracle(ann=True))
 def q_embedding_mmr_topk_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embedding_mmr_topk with the 100-TB pool cut wired in: candidates
     come from the registered hyperplane-LSH index (the embedding_ann_lsh
@@ -3071,7 +3044,7 @@ def _ewma_stream_dir(spark: SparkSession, sf_dir: str) -> str:
         ["ts", "event_type"])
 
 
-@staged_r7("streaming_ewma_level", STAGED_R7_ORACLES["events_ewma_forecast"])
+@register("streaming_ewma_level", ORACLES["events_ewma_forecast"])
 def q_streaming_ewma_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_ewma_forecast turned into the always-on monitoring form:
     events arrive in micro-batches; each batch folds its (type, day)
@@ -3164,7 +3137,7 @@ CONF_ALPHA_NUM = 8   # nominal coverage 8/10 (kept as an integer ratio
 CONF_ALPHA_DEN = 10  # so the k-th-order-statistic index is exact)
 
 
-@staged_r7("events_conformal_volume", f"""
+@register("events_conformal_volume", f"""
 WITH daily AS (
   SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
          CAST(COUNT(*) AS BIGINT) AS y
@@ -3373,7 +3346,7 @@ wc{k} AS MATERIALIZED (
     return head + "".join(steps) + tail
 
 
-@staged_r7("bpe_train_merges", _bpe_oracle())
+@register("bpe_train_merges", _bpe_oracle())
 def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL byte-pair-encoding merge-training loop, iterated for
     {BPE_TRAIN_ROUNDS} rounds over the corpus word-frequency table —
@@ -3453,7 +3426,7 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r7("events_weekday_decomposition", """
+@register("events_weekday_decomposition", """
 WITH daily AS (
   SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
          CAST(COUNT(*) AS BIGINT) AS y
@@ -3582,7 +3555,7 @@ def q_events_weekday_decomposition(spark: SparkSession,
 CHART_L = 3  # control-limit width in ewma-sigmas (the classic 3-sigma)
 
 
-@staged_r7("events_ewma_control_chart", """
+@register("events_ewma_control_chart", """
 WITH daily AS (
   SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
          CAST(COUNT(*) AS BIGINT) AS y
@@ -3722,29 +3695,3 @@ def q_events_ewma_control_chart(spark: SparkSession,
                     band.alias("band"),
                     F.when(F.abs(F.col("ewma") - F.col("mu")) > band, 1)
                     .otherwise(0).alias("flag")))
-
-
-# ---------------------------------------------------------------------------
-# Round-7 promotion fold (VERDICT r6 ask #1). Runs at the END of the module
-# body so every @staged_r7 registration above is complete before the live
-# registry absorbs it, in EVERY import order (the staged_ops/staged_ops_r6
-# fold contract: when queries.py is imported first, its bottom import of
-# this module executes this whole fold before queries.py finishes; when
-# this module is imported first, the fold's own `from plans.queries
-# import ...` below fully executes queries.py — whose tail imports are
-# side-effect imports that skip the in-progress import of THIS module via
-# sys.modules — and control returns here to fold the by-then-complete
-# dicts. Both paths end with the same registry; the update is idempotent
-# if both run.)
-# ---------------------------------------------------------------------------
-from traffic_data_pipeline_spark.plans.queries import (  # noqa: E402
-    ORACLES as _LIVE_ORACLES,
-    QUERIES as _LIVE_QUERIES,
-)
-
-_collide = {n for n in set(_LIVE_QUERIES) & set(STAGED_R7_QUERIES)
-            if _LIVE_QUERIES[n] is not STAGED_R7_QUERIES[n]}
-if _collide:  # not assert: must survive python -O
-    raise RuntimeError(f"staged r7 names collide with registry: {_collide}")
-_LIVE_QUERIES.update(STAGED_R7_QUERIES)
-_LIVE_ORACLES.update(STAGED_R7_ORACLES)

@@ -1,19 +1,4 @@
-"""Round-8 staging area, PROMOTED into the live registry in round 8
-(VERDICT r7 ask #1): operators implemented and oracle-gated during the
-round-7 registration freeze, then folded into QUERIES/ORACLES by this
-module's tail fold once the round-7 promotion (31 staged r7 ops) drained
-through the driver's CORRECTNESS window.
-
-Same contract as the three earlier promoted staging areas
-(plans/staged_ops.py, plans/staged_ops_r6.py, plans/staged_ops_r7.py):
-each op is a Spark callable ``(spark, sf_dir) -> DataFrame`` plus a
-DuckDB oracle string with matching column names. The promotion was the
-established mechanical fold — tail fold here, module import at the end
-of plans/queries.py, STAGED_R8_CAPS moved into tests/test_plan_shapes.py,
-the freeze test flipped into a promotion check, and the
-BENCH_STAGED-costly names queued into ``__spark_entry__._COSTLY_TAIL``.
-tests/test_staged_ops_r8.py keeps the identical query-vs-oracle gate at
-sf0.01 addressed by staged name.
+"""Round-8 operators, registered with ``@register`` into plans/registry.py.
 
 Operator set (VERDICT r6 ask #4's named gaps + training-data/analytics
 gaps after the round-7 sweep):
@@ -43,27 +28,13 @@ Later additions (same contract; see each docstring).
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from traffic_data_pipeline_spark.functions.tmpdirs import cached_dir_valid
+from traffic_data_pipeline_spark.plans.registry import ORACLES, register
 from traffic_data_pipeline_spark.sources.tables import load_table
-
-STAGED_R8_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-STAGED_R8_ORACLES: dict[str, str] = {}
-
-
-def staged_r8(name: str, oracle: str | None = None):
-    def deco(fn):
-        STAGED_R8_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_R8_ORACLES[name] = oracle
-        return fn
-    return deco
-
 
 # the batchId stamp lives in the shared monitor contract since round 10;
 # the _stamp name stays — every later staged module and the replay tests
@@ -117,7 +88,7 @@ def _conformal_handle(spark: SparkSession, state_dir: str, out_dir: str):
     return handle
 
 
-@staged_r8("streaming_conformal_monitor")
+@register("streaming_conformal_monitor")
 def q_streaming_conformal_monitor(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """events_conformal_volume turned into the always-on monitoring form
@@ -257,7 +228,7 @@ def _ivf_creation_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "embedding"))
 
 
-@staged_r8("streaming_ivf_index")
+@register("streaming_ivf_index")
 def q_streaming_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-native incremental IVF index maintenance (VERDICT r6 ask
     #4: the streaming_minhash_index pattern on the ANN side): centroids
@@ -336,7 +307,7 @@ FROM per_day p, dim d
 """
 
 
-@staged_r8("config_scd2_compaction_stats")
+@register("config_scd2_compaction_stats")
 def q_config_scd2_compaction_stats(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
     """Snapshot-over-snapshot SCD-2 compaction metrics (VERDICT r6 ask
@@ -459,7 +430,7 @@ def _rfm_bucket(rn_col: str):
     return ((x - x % F.col("n")) / F.col("n")).cast("int") + F.lit(1)
 
 
-@staged_r8("orders_rfm_segmentation", f"""
+@register("orders_rfm_segmentation", f"""
 WITH cust AS (
   SELECT o_custkey,
          date_diff('day', CAST(MAX(o_orderdate) AS DATE),
@@ -558,7 +529,7 @@ def _rfm_cube_from_cust(cust: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r8("lineitem_basket_lift", """
+@register("lineitem_basket_lift", """
 WITH b AS (
   SELECT DISTINCT l.l_orderkey, p.p_type
   FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey),
@@ -641,7 +612,7 @@ def q_lineitem_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r8("supplier_lead_time_percentiles", """
+@register("supplier_lead_time_percentiles", """
 WITH lead AS (
   SELECT l.l_suppkey, date_diff('day', CAST(o.o_orderdate AS DATE),
                                 CAST(l.l_shipdate AS DATE)) AS lead_days,
@@ -759,7 +730,7 @@ def _tail_index_from_counts(uc: DataFrame) -> DataFrame:
                     .alias("hill_alpha")))
 
 
-@staged_r8("events_user_tail_index", f"""
+@register("events_user_tail_index", f"""
 WITH uc AS (
   SELECT event_type, user_id, CAST(COUNT(*) AS BIGINT) AS c
   FROM events GROUP BY 1, 2),
@@ -857,7 +828,7 @@ GROUP BY 1
 """
 
 
-@staged_r8("corpus_snapshot_novelty_rate")
+@register("corpus_snapshot_novelty_rate")
 def q_corpus_snapshot_novelty_rate(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
     """Snapshot novelty: of the documents ADDED by the new crawl
@@ -912,9 +883,9 @@ _GQ_RULES = ["nwords", "wordlen", "alpha", "sym", "stop"]
 
 
 def _ablation_oracle() -> str:
-    from traffic_data_pipeline_spark.plans.staged_ops import STAGED_ORACLES
+    from traffic_data_pipeline_spark.plans import staged_ops  # noqa: F401
 
-    gq = STAGED_ORACLES["doc_gopher_quality"]
+    gq = ORACLES["doc_gopher_quality"]
     others = {r: [f"ok_{o}" for o in _GQ_RULES if o != r] for r in _GQ_RULES}
     branches = []
     for r in _GQ_RULES:
@@ -941,7 +912,7 @@ agg AS (
 """
 
 
-@staged_r8("doc_quality_rule_ablation")
+@register("doc_quality_rule_ablation")
 def q_doc_quality_rule_ablation(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     """Per-rule ablation of the registered Gopher quality gate
@@ -964,9 +935,11 @@ def q_doc_quality_rule_ablation(spark: SparkSession,
     (zero shuffles in the rule op itself), then a 5-row unpivot of the
     1-row moment frame.
     """
-    from traffic_data_pipeline_spark.plans.staged_ops import STAGED_QUERIES
+    from traffic_data_pipeline_spark.plans.staged_ops import (
+        q_doc_gopher_quality,
+    )
 
-    gq = STAGED_QUERIES["doc_gopher_quality"](spark, sf_dir)
+    gq = q_doc_gopher_quality(spark, sf_dir)
     aggs = [F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("passes").cast("bigint").alias("n_pass_overall")]
     for r in _GQ_RULES:
@@ -1049,7 +1022,7 @@ def _changepoint_from_daily(daily: DataFrame) -> DataFrame:
                     .alias("mean_after")))
 
 
-@staged_r8("events_changepoint_daily", """
+@register("events_changepoint_daily", """
 WITH daily AS (
   SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
          CAST(COUNT(*) AS BIGINT) AS y
@@ -1209,7 +1182,7 @@ GROUP BY t.n_probe, nb.n_base
 """
 
 
-@staged_r8("embedding_ann_recall_curve")
+@register("embedding_ann_recall_curve")
 def q_embedding_ann_recall_curve(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     """Recall@{RECALL_K} of the registered IVF index at probe depths
@@ -1350,7 +1323,7 @@ FROM per p, g
 """
 
 
-@staged_r8("embedding_pq_distortion_report")
+@register("embedding_pq_distortion_report")
 def q_embedding_pq_distortion_report(spark: SparkSession,
                                      sf_dir: str) -> DataFrame:
     """Per-subspace PQ codebook health: the mean reconstruction
@@ -1469,7 +1442,7 @@ def _pq_handle(spark: SparkSession, cent, code_dir: str):
     return handle
 
 
-@staged_r8("streaming_pq_codes")
+@register("streaming_pq_codes")
 def q_streaming_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-native incremental PQ code maintenance (the
     streaming_ivf_index pattern one level deeper): the codebook is
@@ -1523,7 +1496,7 @@ def q_streaming_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r8("part_cross_price_elasticity", """
+@register("part_cross_price_elasticity", """
 WITH pts AS (
   SELECT p.p_type, CAST(date_trunc('day', l.l_shipdate) AS DATE) AS day,
          CAST(SUM(CAST(ROUND(l.l_quantity) AS BIGINT)) AS BIGINT) AS qty,
@@ -1622,7 +1595,7 @@ def q_part_cross_price_elasticity(spark: SparkSession,
 # ---------------------------------------------------------------------------
 
 
-@staged_r8("events_user_kanonymity", """
+@register("events_user_kanonymity", """
 WITH cells AS (
   SELECT event_type, date_trunc('hour', ts) AS hr,
          CAST(COUNT(DISTINCT user_id) AS BIGINT) AS k_users,
@@ -1727,7 +1700,7 @@ FROM tl GROUP BY 1
 """
 
 
-@staged_r8("dedup_impact_by_lang")
+@register("dedup_impact_by_lang")
 def q_dedup_impact_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup fairness audit: per language, the share of documents and of
     TOKENS the MinHash-LSH near-dup pass removes under the one-round
@@ -1776,53 +1749,24 @@ def q_dedup_impact_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _late_bind_oracles() -> None:
     """Oracle strings that reuse other modules' oracles verbatim are
-    bound lazily to avoid import-order traps (the staged_ops_r7 fold
-    imports plans.queries, which does NOT import this module — but
-    binding at decoration time would still force staged_ops_r7 to be
-    fully imported before this module body runs)."""
-    from traffic_data_pipeline_spark.plans.staged_ops_r7 import (
-        STAGED_R7_ORACLES,
-    )
+    bound after this module's registrations, importing the owning
+    module first (binding at decoration time would force staged_ops_r7
+    to be fully imported before this module body runs)."""
+    from traffic_data_pipeline_spark.plans import staged_ops_r7  # noqa: F401
 
-    STAGED_R8_ORACLES["streaming_conformal_monitor"] = (
-        STAGED_R7_ORACLES["events_conformal_volume"])
-    STAGED_R8_ORACLES["streaming_ivf_index"] = (
-        STAGED_R7_ORACLES["embedding_ivf_balance_report"])
-    STAGED_R8_ORACLES["config_scd2_compaction_stats"] = (
+    ORACLES["streaming_conformal_monitor"] = (
+        ORACLES["events_conformal_volume"])
+    ORACLES["streaming_ivf_index"] = (
+        ORACLES["embedding_ivf_balance_report"])
+    ORACLES["config_scd2_compaction_stats"] = (
         _scd2_compaction_oracle())
-    STAGED_R8_ORACLES["corpus_snapshot_novelty_rate"] = _novelty_oracle()
-    STAGED_R8_ORACLES["doc_quality_rule_ablation"] = _ablation_oracle()
-    STAGED_R8_ORACLES["embedding_ann_recall_curve"] = _recall_curve_oracle()
-    STAGED_R8_ORACLES["embedding_pq_distortion_report"] = (
+    ORACLES["corpus_snapshot_novelty_rate"] = _novelty_oracle()
+    ORACLES["doc_quality_rule_ablation"] = _ablation_oracle()
+    ORACLES["embedding_ann_recall_curve"] = _recall_curve_oracle()
+    ORACLES["embedding_pq_distortion_report"] = (
         _pq_distortion_oracle())
-    STAGED_R8_ORACLES["streaming_pq_codes"] = _pq_codes_oracle()
-    STAGED_R8_ORACLES["dedup_impact_by_lang"] = _dedup_impact_oracle()
+    ORACLES["streaming_pq_codes"] = _pq_codes_oracle()
+    ORACLES["dedup_impact_by_lang"] = _dedup_impact_oracle()
 
 
 _late_bind_oracles()
-
-
-# ---------------------------------------------------------------------------
-# Round-8 promotion fold (VERDICT r7 ask #1). Runs at the END of the module
-# body so every @staged_r8 registration above is complete before the live
-# registry absorbs it, in EVERY import order (the staged_ops/staged_ops_r6/
-# staged_ops_r7 fold contract: when queries.py is imported first, its
-# bottom import of this module executes this whole fold before queries.py
-# finishes; when this module is imported first, the fold's own `from
-# plans.queries import ...` below fully executes queries.py — whose tail
-# imports are side-effect imports that skip the in-progress import of THIS
-# module via sys.modules — and control returns here to fold the
-# by-then-complete dicts. Both paths end with the same registry; the
-# update is idempotent if both run.)
-# ---------------------------------------------------------------------------
-from traffic_data_pipeline_spark.plans.queries import (  # noqa: E402
-    ORACLES as _LIVE_ORACLES,
-    QUERIES as _LIVE_QUERIES,
-)
-
-_collide = {n for n in set(_LIVE_QUERIES) & set(STAGED_R8_QUERIES)
-            if _LIVE_QUERIES[n] is not STAGED_R8_QUERIES[n]}
-if _collide:  # not assert: must survive python -O
-    raise RuntimeError(f"staged r8 names collide with registry: {_collide}")
-_LIVE_QUERIES.update(STAGED_R8_QUERIES)
-_LIVE_ORACLES.update(STAGED_R8_ORACLES)

@@ -1,21 +1,4 @@
-"""Round-9 staging area, PROMOTED into the live registry at round 9
-(VERDICT r8 ask #1): built and oracle-gated during round 8 behind the
-registration freeze, folded into QUERIES/ORACLES once the round-8
-promotion (16 staged r8 ops) drained through the driver's CORRECTNESS
-window (it did — all 16 earned hash-green rows in CORRECTNESS_r08).
-
-Same contract as the four earlier promoted staging areas
-(plans/staged_ops.py, plans/staged_ops_r6.py, plans/staged_ops_r7.py,
-plans/staged_ops_r8.py): each op is a Spark callable
-``(spark, sf_dir) -> DataFrame`` plus a DuckDB oracle string with
-matching column names. The promotion was the established mechanical
-fold — the tail fold at the bottom of this module, the import at the
-end of plans/queries.py, exchange caps moved into
-tests/test_plan_shapes.py::CAPS, the freeze test flipped into a
-promotion check, and the two BENCH_STAGED-costly streaming monitors
-queued into ``__spark_entry__._COSTLY_TAIL``.
-tests/test_staged_ops_r9.py keeps the identical query-vs-oracle gate at
-sf0.01 addressing each op by its staged name.
+"""Round-9 operators, registered with ``@register`` into plans/registry.py.
 
 Operator set (VERDICT r7 ask #5's named gaps — the round-9 staging
 candidates the round-7 judge and SURVEY.md §7 tail both name):
@@ -60,33 +43,19 @@ the same area (each independently oracle-gated, capped, and swept):
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from traffic_data_pipeline_spark.functions.tmpdirs import cached_dir_valid
+from traffic_data_pipeline_spark.plans.registry import ORACLES, register
 from traffic_data_pipeline_spark.sources.tables import load_table
-
-STAGED_R9_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-STAGED_R9_ORACLES: dict[str, str] = {}
-
-
-def staged_r9(name: str, oracle: str | None = None):
-    def deco(fn):
-        STAGED_R9_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_R9_ORACLES[name] = oracle
-        return fn
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # events_user_ldiversity — sensitive-value diversity inside each QI cell
 # ---------------------------------------------------------------------------
 
 
-@staged_r9("events_user_ldiversity", """
+@register("events_user_ldiversity", """
 WITH cells AS (
   SELECT event_type, date_trunc('hour', ts) AS hr,
          CAST(COUNT(DISTINCT CAST(FLOOR(value / 10.0) AS INTEGER))
@@ -169,7 +138,7 @@ def q_events_user_ldiversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_r9("events_user_tcloseness", """
+@register("events_user_tcloseness", """
 WITH ev AS (
   SELECT event_type, date_trunc('hour', ts) AS hr,
          CAST(FLOOR(value / 10.0) AS INTEGER) AS band
@@ -325,7 +294,7 @@ FROM tl GROUP BY 1
 """
 
 
-@staged_r9("dedup_impact_by_source")
+@register("dedup_impact_by_source")
 def q_dedup_impact_by_source(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     """Dedup fairness audit, per-SOURCE marginal (SURVEY.md §7's
@@ -409,7 +378,7 @@ FROM tl GROUP BY 1
 """
 
 
-@staged_r9("dedup_impact_by_lang_cc")
+@register("dedup_impact_by_lang_cc")
 def q_dedup_impact_by_lang_cc(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     """Dedup fairness audit under the EXACT-CC survivor rule (VERDICT r7
@@ -522,7 +491,7 @@ def _changepoint_handle(spark: SparkSession, state_dir: str, out_dir: str):
     return handle
 
 
-@staged_r9("streaming_changepoint_monitor")
+@register("streaming_changepoint_monitor")
 def q_streaming_changepoint_monitor(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
     """events_changepoint_daily turned into the always-on monitoring form
@@ -579,7 +548,7 @@ EPOCH_BUDGET_MULT = 3   # training token budget = MULT x corpus tokens
 EPOCH_RISK = 4.0        # the ~4-epoch repeated-data degradation rule
 
 
-@staged_r9("corpus_epoch_plan", f"""
+@register("corpus_epoch_plan", f"""
 WITH per_src AS (
   SELECT source,
          CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -715,7 +684,7 @@ def _tailindex_handle(spark: SparkSession, state_dir: str, out_dir: str):
     return handle
 
 
-@staged_r9("streaming_tailindex_monitor")
+@register("streaming_tailindex_monitor")
 def q_streaming_tailindex_monitor(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """events_user_tail_index turned into the always-on monitoring form
@@ -783,44 +752,16 @@ def _late_bind_oracles() -> None:
     """Oracle strings that reuse other modules' oracles verbatim are
     bound lazily (the staged_ops_r8 pattern) to avoid import-order
     traps."""
-    from traffic_data_pipeline_spark.plans.staged_ops_r8 import (
-        STAGED_R8_ORACLES,
-    )
+    from traffic_data_pipeline_spark.plans import staged_ops_r8  # noqa: F401
 
-    STAGED_R9_ORACLES["streaming_changepoint_monitor"] = (
-        STAGED_R8_ORACLES["events_changepoint_daily"])
-    STAGED_R9_ORACLES["streaming_tailindex_monitor"] = (
-        STAGED_R8_ORACLES["events_user_tail_index"])
-    STAGED_R9_ORACLES["dedup_impact_by_lang_cc"] = (
+    ORACLES["streaming_changepoint_monitor"] = (
+        ORACLES["events_changepoint_daily"])
+    ORACLES["streaming_tailindex_monitor"] = (
+        ORACLES["events_user_tail_index"])
+    ORACLES["dedup_impact_by_lang_cc"] = (
         _dedup_impact_cc_oracle())
-    STAGED_R9_ORACLES["dedup_impact_by_source"] = (
+    ORACLES["dedup_impact_by_source"] = (
         _dedup_impact_source_oracle())
 
 
 _late_bind_oracles()
-
-
-# ---------------------------------------------------------------------------
-# Round-9 promotion fold (VERDICT r8 ask #1). Runs at the END of the module
-# body so every @staged_r9 registration above is complete before the live
-# registry absorbs it, in EVERY import order (the staged_ops/staged_ops_r6/
-# staged_ops_r7/staged_ops_r8 fold contract: when queries.py is imported
-# first, its bottom import of this module executes this whole fold before
-# queries.py finishes; when this module is imported first, the fold's own
-# `from plans.queries import ...` below fully executes queries.py — whose
-# tail imports are side-effect imports that skip the in-progress import of
-# THIS module via sys.modules — and control returns here to fold the
-# by-then-complete dicts. Both paths end with the same registry; the
-# update is idempotent if both run.)
-# ---------------------------------------------------------------------------
-from traffic_data_pipeline_spark.plans.queries import (  # noqa: E402
-    ORACLES as _LIVE_ORACLES,
-    QUERIES as _LIVE_QUERIES,
-)
-
-_collide = {n for n in set(_LIVE_QUERIES) & set(STAGED_R9_QUERIES)
-            if _LIVE_QUERIES[n] is not STAGED_R9_QUERIES[n]}
-if _collide:  # not assert: must survive python -O
-    raise RuntimeError(f"staged r9 names collide with registry: {_collide}")
-_LIVE_QUERIES.update(STAGED_R9_QUERIES)
-_LIVE_ORACLES.update(STAGED_R9_ORACLES)
